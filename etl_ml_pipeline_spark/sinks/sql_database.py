@@ -27,8 +27,11 @@ Spark-first differences (SURVEY.md §2.3/L3, §4.2):
   engine in one set-based statement instead of per-batch statement
   round-trips, and executors only ever perform the cheap append.
   ``upsert_strategy: rows`` restores the direct row-level ON CONFLICT
-  path (toLocalIterator stream, or ``foreachPartition`` when
-  ``distributed: true``).
+  path.
+- **Driver memory**: without ``distributed``/``delta_path`` a load is
+  ONE Spark job, ``df.toArrow()``, holding the load's rows in driver
+  memory; Spark caps it at ``spark.driver.maxResultSize`` and fails with
+  its own error. Larger loads belong on ``distributed`` or ``delta_path``.
 - SQLite is a single-writer embedded DB, so a single driver-side writer
   is the *correct* concurrency model for it. For server databases
   (Postgres), ``connection_factory`` supplies the DBAPI connection per
@@ -48,6 +51,7 @@ from __future__ import annotations
 import sqlite3
 from typing import Any, Callable, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -95,25 +99,29 @@ def unique_index_sql(table: str, primary_keys: list[str]) -> str:
     )
 
 
-def upsert_sql(table: str, columns: list[str], primary_keys: list[str]) -> str:
-    """Dialect: SQLite/Postgres ``ON CONFLICT`` (reference :89-118)."""
+def insert_sql(table: str, columns: list[str]) -> str:
     col_list = ", ".join(quote_ident(c) for c in columns)
     placeholders = ", ".join("?" for _ in columns)
+    return f"INSERT INTO {quote_ident(table)} ({col_list}) VALUES ({placeholders})"
+
+
+def on_conflict_sql(columns: list[str], primary_keys: list[str]) -> str:
+    """Dialect: SQLite/Postgres ``ON CONFLICT`` (reference :89-118)."""
     pk_list = ", ".join(quote_ident(k) for k in primary_keys)
     non_pk = [c for c in columns if c not in primary_keys]
     if non_pk:
         sets = ", ".join(f"{quote_ident(c)} = excluded.{quote_ident(c)}" for c in non_pk)
-        conflict = f"DO UPDATE SET {sets}"
-    else:
-        conflict = "DO NOTHING"  # PK-only table (reference :108-117)
-    return (
-        f"INSERT INTO {quote_ident(table)} ({col_list}) VALUES ({placeholders}) "
-        f"ON CONFLICT ({pk_list}) {conflict}"
-    )
+        return f"ON CONFLICT ({pk_list}) DO UPDATE SET {sets}"
+    return f"ON CONFLICT ({pk_list}) DO NOTHING"  # PK-only table (reference :108-117)
+
+
+def upsert_sql(table: str, columns: list[str], primary_keys: list[str]) -> str:
+    return f"{insert_sql(table, columns)} {on_conflict_sql(columns, primary_keys)}"
 
 
 def _to_py(value: Any) -> Any:
-    """numpy scalar -> native; datetime/date -> ISO string.
+    """numpy scalar -> native; datetime/date -> ISO string; Decimal ->
+    float (DecimalType columns are REAL).
 
     The reference serializes dates as ISO strings for SQLite
     compatibility (finance_transformer.py:57-62); numpy unwrap mirrors
@@ -121,11 +129,26 @@ def _to_py(value: Any) -> Any:
     sqlite3 default adapters.
     """
     import datetime
+    import decimal
 
     if isinstance(value, (datetime.datetime, datetime.date)):
         return value.isoformat(sep=" ") if isinstance(value, datetime.datetime) else value.isoformat()
+    if isinstance(value, decimal.Decimal):
+        return float(value)
     item = getattr(value, "item", None)
     return item() if callable(item) else value
+
+
+def arrow_rows(data: pa.Table, batch_size: int) -> Iterable[tuple]:
+    """Row tuples of an Arrow table, ``batch_size`` rows converted at a
+    time, in the cell forms ``collect()`` gives: Arrow's UTC-aware
+    TimestampType values become naive local time, as in ``Row``s."""
+    for batch in data.to_batches(max_chunksize=batch_size):
+        cols = [col.to_pylist() for col in batch.columns]
+        for k, col in enumerate(batch.columns):
+            if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+                cols[k] = [None if v is None else v.astimezone().replace(tzinfo=None) for v in cols[k]]
+        yield from zip(*cols)
 
 
 def write_batches(
@@ -209,35 +232,34 @@ class SqlDatabaseSink(BaseSink):
             missing = [k for k in pks if k not in columns]
             if missing:
                 raise ValueError(f"primary_keys not in DataFrame: {missing}")
-            sql = upsert_sql(table, columns, pks)
-        else:
-            col_list = ", ".join(quote_ident(c) for c in columns)
-            placeholders = ", ".join("?" for _ in columns)
-            sql = f"INSERT INTO {quote_ident(table)} ({col_list}) VALUES ({placeholders})"
+        sql = upsert_sql(table, columns, pks) if mode == "upsert" else insert_sql(table, columns)
 
-        # Empty-frame no-op *after* validation (reference :82-84) — but we
-        # still must know emptiness; isEmpty() is a cheap limit-1 action.
-        if df.isEmpty():
+        # One Arrow collect per driver-side load (see "Driver memory"
+        # above); Delta/distributed loads never collect, so they probe.
+        # Empty = no-op after validation, before any DDL (reference :82-84).
+        delta = mode == "upsert" and self.config.get("delta_path")
+        data = None if delta or self.config.get("distributed") else df.toArrow()
+        if (df.isEmpty() if data is None else data.num_rows == 0):
             return
 
         batch_size = int(self.config.get("batch_size", 1000))
-        if mode == "upsert" and self.config.get("delta_path"):
+        if delta:
             self._load_delta_merge(df, pks)
             return
         self._prepare_table(df, table, mode, pks)
         if mode == "upsert" and self.config.get("upsert_strategy", "staged") == "staged":
-            self._load_staged_upsert(df, table, pks, batch_size)
+            self._load_staged_upsert(df, data, table, pks, batch_size)
             return
-        if self.config.get("distributed"):
+        self._write(df, data, sql, batch_size)
+
+    def _write(self, df: DataFrame, data: pa.Table | None, sql: str, batch_size: int) -> None:
+        if data is None:  # distributed: the executors write
             self._load_distributed(df, sql, batch_size)
-            return
-        # Stream partitions through the driver: one partition in memory
-        # at a time, batched executemany into a single connection.
-        rows = (tuple(row) for row in df.toLocalIterator(prefetchPartitions=True))
-        write_batches(self._conn, sql, rows, batch_size)
+        else:
+            write_batches(self._conn, sql, arrow_rows(data, batch_size), batch_size)
 
     def _load_staged_upsert(
-        self, df: DataFrame, table: str, pks: list[str], batch_size: int
+        self, df: DataFrame, data: pa.Table | None, table: str, pks: list[str], batch_size: int
     ) -> None:
         """Stage-and-merge upsert (the default): append rows to a
         transient stage table, then one server-side set-based merge.
@@ -258,19 +280,7 @@ class SqlDatabaseSink(BaseSink):
         stage = f"{table}__stage_{uuid.uuid4().hex[:8]}"
         columns = df.columns
         col_list = ", ".join(quote_ident(c) for c in columns)
-        placeholders = ", ".join("?" for _ in columns)
-        stage_insert = (
-            f"INSERT INTO {quote_ident(stage)} ({col_list}) VALUES ({placeholders})"
-        )
         pk_list = ", ".join(quote_ident(k) for k in pks)
-        non_pk = [c for c in columns if c not in pks]
-        if non_pk:
-            sets = ", ".join(
-                f"{quote_ident(c)} = excluded.{quote_ident(c)}" for c in non_pk
-            )
-            conflict = f"DO UPDATE SET {sets}"
-        else:
-            conflict = "DO NOTHING"
         # the inner WHERE also satisfies SQLite's parser requirement that
         # an INSERT..SELECT..ON CONFLICT source carry a WHERE clause
         merge = (
@@ -278,19 +288,12 @@ class SqlDatabaseSink(BaseSink):
             f"SELECT {col_list} FROM ("
             f"  SELECT *, row_number() OVER (PARTITION BY {pk_list}) AS __rn "
             f"  FROM {quote_ident(stage)}"
-            f") WHERE __rn = 1 "
-            f"ON CONFLICT ({pk_list}) {conflict}"
+            f") WHERE __rn = 1 {on_conflict_sql(columns, pks)}"
         )
         self._conn.execute(create_table_sql(stage, df.schema))
         self._conn.commit()
         try:
-            if self.config.get("distributed"):
-                self._load_distributed(df, stage_insert, batch_size)
-            else:
-                rows = (
-                    tuple(row) for row in df.toLocalIterator(prefetchPartitions=True)
-                )
-                write_batches(self._conn, stage_insert, rows, batch_size)
+            self._write(df, data, insert_sql(stage, columns), batch_size)
             self._conn.execute(merge)
             self._conn.commit()
         finally:

@@ -354,3 +354,120 @@ def test_delta_path_without_delta_spark_raises(spark, db):
     with pytest.raises(NotImplementedError, match="delta-spark"):
         sink.load(spark.createDataFrame([(1, "a")], ["id", "v"]))
     sink.disconnect()
+
+
+@pytest.fixture(params=["UTC", "America/New_York"])
+def local_tz(request, monkeypatch):
+    """Run under a given process time zone: naive timestamps go in and
+    come back out in the driver's local time on every write path."""
+    import time
+
+    monkeypatch.setenv("TZ", request.param)
+    time.tzset()
+    yield request.param
+    monkeypatch.undo()
+    time.tzset()
+
+
+_ALL_TYPES = (
+    "id long, b byte, s short, i int, flag boolean, f float, d double, "
+    "dec decimal(12,2), txt string, day date, ts timestamp, bin binary"
+)
+
+
+def _all_types_df(spark):
+    """Every type in _SPARK_TO_SQL plus null, NaN, -0.0, sub-second
+    timestamps and an empty binary value, over 3 partitions."""
+    import datetime
+    from decimal import Decimal
+
+    rows = [
+        (1, 1, 2, 3, True, 1.1, float("nan"), Decimal("1234.56"), "a",
+         datetime.date(2024, 1, 2), datetime.datetime(2024, 1, 1, 12, 0, 0, 123456),
+         b"\x00\x01"),
+        (2, -128, -32768, -(2**31), False, -0.0, -0.0, Decimal("-0.01"), "",
+         datetime.date(1970, 1, 1), datetime.datetime(1999, 12, 31, 23, 59, 59, 1), b""),
+        (3, None, None, None, None, None, None, None, None, None, None, None),
+        (4, 127, 32767, 2**31 - 1, True, float("inf"), 1e300, Decimal("9999999999.99"),
+         "naïve ☃", datetime.date(2038, 7, 4), datetime.datetime(2024, 7, 1, 0, 0), b"xyz"),
+    ]
+    df = spark.createDataFrame(rows, _ALL_TYPES).repartition(3)
+    assert df.rdd.getNumPartitions() == 3
+    return df
+
+
+# What every write path must store for _all_types_df: the cells that
+# writing its collect() Rows gives (SQLite binds NaN as NULL and keeps
+# -0.0 as 0.0).
+_ALL_TYPES_STORED = [
+    (1, 1, 2, 3, 1, 1.100000023841858, None, 1234.56, "a", "2024-01-02",
+     "2024-01-01 12:00:00.123456", b"\x00\x01"),
+    (2, -128, -32768, -(2**31), 0, 0.0, 0.0, -0.01, "", "1970-01-01",
+     "1999-12-31 23:59:59.000001", b""),
+    (3, None, None, None, None, None, None, None, None, None, None, None),
+    (4, 127, 32767, 2**31 - 1, 1, float("inf"), 1e300, 9999999999.99, "naïve ☃",
+     "2038-07-04", "2024-07-01 00:00:00", b"xyz"),
+]
+
+
+# The driver-side write paths: append, the default staged upsert and
+# the row-level upsert.
+_DRIVER_PATHS = pytest.mark.parametrize(
+    "extra",
+    [
+        {"if_exists": "append"},
+        {"if_exists": "upsert", "primary_keys": ["id"]},
+        {"if_exists": "upsert", "primary_keys": ["id"], "upsert_strategy": "rows"},
+    ],
+    ids=["append", "staged_upsert", "rows_upsert"],
+)
+
+
+@_DRIVER_PATHS
+def test_all_types_stored_cells(spark, db, local_tz, extra):
+    df = _all_types_df(spark)
+    with SqlDatabaseSink(spark, {"database": db, "table": "t", **extra}) as sink:
+        sink.load(df)
+        if extra["if_exists"] == "upsert":
+            sink.load(df)  # second load takes the ON CONFLICT update branch
+    got = _fetch(db, "SELECT * FROM t ORDER BY id")
+    assert got == _ALL_TYPES_STORED
+    # == equates 1, 1.0 and True, and 0.0 with -0.0; repr does not
+    assert repr(got) == repr(_ALL_TYPES_STORED)
+
+
+def test_decimal_upsert(spark, db):
+    from decimal import Decimal
+
+    cfg = {"database": db, "table": "t", "if_exists": "upsert", "primary_keys": ["id"]}
+    schema = "id long, price decimal(12,2)"
+    with SqlDatabaseSink(spark, cfg) as sink:
+        sink.load(_df(spark, [(1, Decimal("10.25")), (2, Decimal("3.10"))], schema))
+        sink.load(_df(spark, [(2, Decimal("4.75"))], schema))
+    assert _fetch(db, "SELECT id, price FROM t ORDER BY id") == [(1, 10.25), (2, 4.75)]
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs fired by fn(), counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"sqlsink-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@_DRIVER_PATHS
+def test_driver_load_is_one_spark_job(spark, db, extra):
+    df = spark.range(0, 30, 1, numPartitions=3).selectExpr("id", "cast(id AS string) AS v")
+    with SqlDatabaseSink(spark, {"database": db, "table": "t", **extra}) as sink:
+        assert _jobs_of(spark, lambda: sink.load(df.where("id < 0"))) == 1
+        assert _fetch(db, "SELECT name FROM sqlite_master WHERE type='table'") == []
+        assert _jobs_of(spark, lambda: sink.load(df)) == 1
+    assert _fetch(db, "SELECT count(*) FROM t") == [(30,)]
