@@ -11,8 +11,12 @@ for Spark's execution model:
   Catalyst fuses/pushes down/prunes across stage boundaries.
 - Cursor semantics are preserved exactly: cursor = max(cursor_field)
   computed on the *post-extract, pre-transform* table (engine.py:94-105),
-  persisted only after a successful load (engine.py:126-128). The max()
-  runs as a Spark agg (distributed), not a driver scan.
+  persisted only after a successful load (engine.py:126-128). The source
+  computes it (``BaseSource.cursor_max``): a local parquet extract with
+  a byte/short/int/long cursor answers it from the footers of the files
+  its own scan lists (no Spark job); every other case runs one Spark agg.
+  A parquet source's inferred schema is pinned beside the cursor, in the
+  same atomic state write, so the next run reads without inference.
 - Retry wraps extract-plan-construction+load (the action) and is a
   driver-side decorator (engine.py:201-218); Spark tasks additionally
   retry internally via spark.task.maxFailures.
@@ -27,7 +31,6 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_ml_pipeline_spark import plugins  # noqa: F401  (registers built-ins)
 from etl_ml_pipeline_spark.config import PipelineConfig, load_config
@@ -68,14 +71,16 @@ class PipelineEngine:
         cfg = self.config.pipeline
         settings = self.config.settings
         try:
-            df, new_cursor = self._with_retry(
+            df, new_cursor, pin = self._with_retry(
                 self._extract, settings.retry, stage="extract", full_refresh=full_refresh
             )
             df = self._apply_transforms(df)
             if cfg.load is not None:
                 self._with_retry(self._load, settings.retry, stage="load", df=df)
             if cfg.incremental is not None and new_cursor is not None:
-                # Commit the cursor only after a successful load
+                # Commit the cursor (and the schema pin, in the same
+                # write) only after a successful load
+                self.state.stage_pin(cfg.name, pin)
                 self.state.set(cfg.name, new_cursor)
             return df
         except Exception:
@@ -91,7 +96,9 @@ class PipelineEngine:
             return None
 
     # ------------------------------------------------------------------
-    def _extract(self, full_refresh: bool = False) -> tuple[DataFrame, Any]:
+    def _extract(self, full_refresh: bool = False) -> tuple[DataFrame, Any, Any]:
+        """The extracted frame, the new cursor (None: not incremental, or
+        no new rows) and the schema pin to store beside it."""
         cfg = self.config.pipeline
         source_cls = SOURCES.get(cfg.extract.type)
         source = source_cls(self.spark, cfg.extract.config)
@@ -105,17 +112,19 @@ class PipelineEngine:
                 else self.state.get(cfg.name, inc.initial_value)
             )
             source.apply_cursor(cursor_value, inc.cursor_field, inc.cursor_param)
+            if not full_refresh:
+                source.apply_schema_pin(self.state.get_pin(cfg.name))
 
         with source:
             df = source.extract()
 
-        new_cursor = None
+        new_cursor = pin = None
         if cfg.incremental is not None:
             # Reference semantics: cursor computed post-extract pre-transform
             # (engine.py:94-105) so row-dropping transforms can't shrink it.
-            row = df.agg(F.max(cfg.incremental.cursor_field).alias("c")).collect()
-            new_cursor = row[0]["c"] if row else None
-        return df, new_cursor
+            new_cursor = source.cursor_max(df, cfg.incremental.cursor_field, cursor_value)
+            pin = source.schema_pin()
+        return df, new_cursor, pin
 
     def _apply_transforms(self, df: DataFrame) -> DataFrame:
         for step in self.config.pipeline.transform:

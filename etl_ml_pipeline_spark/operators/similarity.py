@@ -480,8 +480,15 @@ def fold_cosine_max(
     input's ``keep_cols`` (name, spark-ddl-type) pass through untouched;
     one output row per input row (callers rely on the carried key being
     unique — the old groupBy(key) over the crossJoin was an identity
-    grouping for unique keys).
+    grouping for unique keys). A NULL vector row gets a NULL cosine, as
+    the fold gave.
     """
+    dims = {len(v) for v in bench_vecs}
+    if len(dims) != 1 or 0 in dims:
+        raise ValueError(
+            "fold_cosine_max: bench_vecs must be a non-empty list of "
+            f"non-empty vectors of one length (got lengths {sorted(dims)})"
+        )
     bench = np.asarray(bench_vecs, dtype=np.float64)
     nb = np.zeros(bench.shape[0], dtype=np.float64)
     for j in range(bench.shape[1]):
@@ -497,7 +504,13 @@ def fold_cosine_max(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a = np.stack(pdf[vec_col].to_numpy())
+            present = pdf[vec_col].notna().to_numpy()
+            out = pdf[keep_names].copy()
+            out[out_col] = np.nan  # NaN leaves the Arrow kernel as NULL
+            if not present.any():
+                yield out
+                continue
+            a = np.stack(pdf[vec_col].to_numpy()[present])
             na = np.zeros(len(a), dtype=np.float64)
             for j in range(d):
                 na = na + a[:, j] * a[:, j]
@@ -508,8 +521,7 @@ def fold_cosine_max(
                 for j in range(d):
                     acc = acc + a[:, j] * bench[b_idx, j]
                 best = np.maximum(best, acc / (na * nb[b_idx]))
-            out = pdf[keep_names].copy()
-            out[out_col] = best
+            out.loc[present, out_col] = best
             yield out
 
     return df.select(*keep_names, vec_col).mapInPandas(gen, schema)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 class BaseSource:
@@ -43,6 +44,24 @@ class BaseSource:
         override this to inject a query param (reference engine.py:159-162).
         """
         self._cursor_predicate = (cursor_field, cursor)
+
+    def cursor_max(self, df: DataFrame, cursor_field: str, cursor: Any) -> Any:
+        """The new cursor: ``max(cursor_field)`` over the extracted rows,
+        which the cursor already filtered (None when there are none).
+
+        The default is one Spark aggregate over ``df``; a source that can
+        answer it from metadata overrides this and falls back here.
+        """
+        row = df.agg(F.max(cursor_field).alias("c")).collect()
+        return row[0]["c"] if row else None
+
+    def apply_schema_pin(self, pin: dict[str, Any] | None) -> None:
+        """Offer the schema pin the previous run stored beside the cursor.
+        Sources that infer no schema ignore it."""
+
+    def schema_pin(self) -> dict[str, Any] | None:
+        """The pin to store beside this run's cursor; None stores none."""
+        return None
 
     # -- extraction --------------------------------------------------------
     def extract(self) -> DataFrame:

@@ -3,13 +3,22 @@
 from __future__ import annotations
 
 import json
+import math
+import sqlite3
+from datetime import datetime, timedelta
+from decimal import Decimal
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 import yaml
 
 from etl_ml_pipeline_spark.config import PipelineConfig, load_config
 from etl_ml_pipeline_spark.engine import PipelineEngine
 from etl_ml_pipeline_spark.registry import list_registered
+from etl_ml_pipeline_spark.sources.base import BaseSource
+from etl_ml_pipeline_spark.sources.files import ParquetSource
+from etl_ml_pipeline_spark.state import StateManager
 
 
 def _write_config(tmp_path, cfg: dict) -> str:
@@ -109,6 +118,220 @@ def test_incremental_cursor_not_saved_on_load_failure(tmp_path, spark, sf_dir):
     with pytest.raises(Exception):
         engine.run()
     assert not state_path.exists() or "inc_fail" not in json.loads(state_path.read_text())
+
+    # After a committed run, a failed load saves neither the new cursor
+    # nor the new schema pin: the state file is left byte-identical.
+    landing = tmp_path / "landing"
+    landing.mkdir()
+
+    def engine_to(out):
+        inline = {
+            "pipeline": {
+                "extract": {"config": {"path": str(landing)}},
+                "load": {"config": {"path": str(out)}},
+                "incremental": {"cursor_field": "seq", "initial_value": 0},
+            }
+        }
+        return PipelineEngine(
+            _write_config(tmp_path, cfg), spark=spark, inline_config=inline,
+            state_path=str(state_path),
+        )
+
+    pq.write_table(pa.table({"k": [1, 2], "seq": [1, 1]}), landing / "b1.parquet")
+    engine_to(tmp_path / "ok.json").run()
+    committed = state_path.read_text()
+    assert StateManager(state_path).get("inc_fail") == 1
+    assert StateManager(state_path).get_pin("inc_fail") is not None
+    (landing / "b1.parquet").unlink()
+    pq.write_table(
+        pa.table({"k": [3], "seq": [2], "extra": ["x"]}), landing / "b2.parquet"
+    )
+    with pytest.raises(Exception):
+        engine_to(blocker / "sub" / "out.json").run()
+    assert state_path.read_text() == committed
+
+
+def _landing_pipeline(tmp_path, spark, cursor_field, load):
+    """An incremental pipeline over ``tmp_path/landing`` and its state path."""
+    cfg = {
+        "version": 1,
+        "pipeline": {
+            "name": "landing",
+            "extract": {"type": "parquet", "config": {"path": str(tmp_path / "landing")}},
+            "load": load,
+            "incremental": {"cursor_field": cursor_field},
+        },
+    }
+    state_path = tmp_path / "state.json"
+    engine = PipelineEngine(
+        _write_config(tmp_path, cfg), spark=spark, state_path=str(state_path)
+    )
+    return engine, state_path
+
+
+def _land(tmp_path, batch):
+    """Land one batch: relative file path -> table, or (table, extra
+    ``pq.write_table`` arguments), or None to delete the file. Two-row
+    row groups, so a file can hold an all-null group."""
+    for rel, table in batch.items():
+        path = tmp_path / "landing" / rel
+        if table is None:
+            path.unlink()
+            continue
+        table, kwargs = table if isinstance(table, tuple) else (table, {})
+        path.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(table, path, row_group_size=2, **kwargs)
+
+
+def _sqlite_sink(tmp_path):
+    return {
+        "type": "sql_database",
+        "config": {
+            "database": str(tmp_path / "out.db"),
+            "table": "t",
+            "if_exists": "upsert",
+            "primary_keys": ["k"],
+        },
+    }
+
+
+def _sqlite_rows(tmp_path):
+    with sqlite3.connect(tmp_path / "out.db") as con:
+        return con.execute("SELECT k, seq FROM t ORDER BY k").fetchall()
+
+
+def test_incremental_cursor_ignores_file_landing_after_extract(tmp_path, spark, monkeypatch):
+    """A file landing after extract() returns and before the cursor is
+    computed belongs to the next batch: the committed cursor is the max
+    of the rows the sink loaded, and the next run loads the late file."""
+    engine, state_path = _landing_pipeline(tmp_path, spark, "seq", _sqlite_sink(tmp_path))
+    _land(tmp_path, {"b1.parquet": pa.table({"k": [1, 2], "seq": [1, 1]})})
+    extract = ParquetSource.extract
+
+    def extract_then_land(self):
+        df = extract(self)
+        _land(tmp_path, {"b2.parquet": pa.table({"k": [3], "seq": [2]})})
+        return df
+
+    monkeypatch.setattr(ParquetSource, "extract", extract_then_land)
+    engine.run()
+    monkeypatch.undo()
+    assert _sqlite_rows(tmp_path) == [(1, 1), (2, 1)]
+    assert StateManager(state_path).get("landing") == 1
+    engine.run()
+    assert _sqlite_rows(tmp_path) == [(1, 1), (2, 1), (3, 2)]
+    assert StateManager(state_path).get("landing") == 2
+
+
+def _ts(*seconds):
+    return pa.array(
+        [datetime(2024, 1, 1) + timedelta(seconds=s) for s in seconds], pa.timestamp("us")
+    )
+
+
+def _dec(*values):
+    return pa.array([Decimal(v) for v in values], pa.decimal128(10, 2))
+
+
+# case -> (cursor field, batches, how many batches' cursors take the Spark
+# aggregate because the footers cannot answer them exactly)
+_CURSOR_CASES = {
+    "timestamp": ("ts", [
+        {"b1.parquet": pa.table({"k": [1, 2], "ts": _ts(1, 2)})},
+        {"b2.parquet": pa.table({"k": [3], "ts": _ts(3)})},
+    ], 2),
+    "double_with_nan": ("x", [
+        {"b1.parquet": pa.table({"k": [1, 2], "x": [2.5, 1.5]})},
+        {"b2.parquet": pa.table({"k": [3, 4], "x": [3.5, math.nan]})},
+    ], 2),
+    "decimal": ("d", [
+        {"b1.parquet": pa.table({"k": [1, 2], "d": _dec("1.25", "2.50")})},
+        {"b2.parquet": pa.table({"k": [3], "d": _dec("3.75")})},
+    ], 2),
+    "hive_partition": ("seq", [
+        {"seq=1/part.parquet": pa.table({"k": [1, 2]})},
+        {"seq=2/part.parquet": pa.table({"k": [3]})},
+    ], 2),
+    "no_statistics": ("seq", [
+        {"b1.parquet": pa.table({"k": [1, 2], "seq": [1, 1]})},
+        {"b2.parquet": (pa.table({"k": [3], "seq": [2]}), {"write_statistics": False})},
+    ], 1),
+    "all_null_row_group": ("seq", [
+        {"b1.parquet": pa.table({"k": [1, 2, 3, 4], "seq": pa.array([None, None, 1, 1], pa.int64())})},
+        {
+            "b2.parquet": pa.table({"k": [5, 6], "seq": pa.array([None, None], pa.int64())}),
+            "b3.parquet": pa.table({"k": [7], "seq": pa.array([2], pa.int64())}),
+        },
+    ], 0),
+    "added_column": ("seq", [
+        {"b1.parquet": pa.table({"k": [1, 2], "seq": [1, 1]})},
+        {"b1.parquet": None, "b2.parquet": pa.table({"k": [3], "seq": [2], "extra": ["x"]})},
+    ], 0),
+}
+
+
+def _run_cursor_case(tmp_path, spark, field, batches):
+    """Committed cursor after each batch, and the sink's rows."""
+    tmp_path.mkdir()
+    out = tmp_path / "out"
+    engine, state_path = _landing_pipeline(
+        tmp_path, spark, field,
+        {"type": "parquet", "config": {"path": str(out), "mode": "append"}},
+    )
+    cursors = []
+    for batch in batches:
+        _land(tmp_path, batch)
+        engine.run()
+        cursors.append(json.dumps(StateManager(state_path).get("landing")))
+    sink = spark.read.option("mergeSchema", "true").parquet(str(out))
+    # repr, so a NaN cell equals itself
+    return cursors, sorted(repr(sorted(r.asDict().items())) for r in sink.collect())
+
+
+@pytest.mark.parametrize("case", list(_CURSOR_CASES))
+def test_incremental_parquet_cursor_matches_aggregate(tmp_path, spark, monkeypatch, caplog, case):
+    """Footer cursor and schema pin commit the same cursors and load the
+    same rows as the Spark-aggregate cursor with per-run inference. Cursor
+    types the footers cannot answer exactly take the aggregate; a column
+    added after the schema was pinned re-infers and reaches the sink."""
+    field, batches, n_aggregates = _CURSOR_CASES[case]
+    aggregates = []
+    base_cursor_max = BaseSource.cursor_max
+
+    def counted(self, df, cursor_field, cursor):
+        aggregates.append(cursor)
+        return base_cursor_max(self, df, cursor_field, cursor)
+
+    monkeypatch.setattr(BaseSource, "cursor_max", counted)
+    got = _run_cursor_case(tmp_path / "footer", spark, field, batches)
+    assert len(aggregates) == n_aggregates
+
+    monkeypatch.setattr(ParquetSource, "cursor_max", BaseSource.cursor_max)
+    monkeypatch.setattr(ParquetSource, "apply_schema_pin", BaseSource.apply_schema_pin)
+    want = _run_cursor_case(tmp_path / "aggregate", spark, field, batches)
+    assert got == want
+    if case == "added_column":
+        assert repr([("extra", "x"), ("k", 3), ("seq", 2)]) in got[1]
+        assert "do not all match the pinned schema" in caplog.text
+
+
+def test_incremental_parquet_run_jobs(tmp_path, spark):
+    """The first incremental parquet -> SQLite run fires 2 Spark jobs
+    (schema inference, load); with the schema pinned, a later run's only
+    job is the load (the aggregate cursor and inference made it 4)."""
+    from test_sql_sink import _jobs_of
+
+    engine, state_path = _landing_pipeline(tmp_path, spark, "seq", _sqlite_sink(tmp_path))
+    _land(tmp_path, {"b1.parquet": pa.table({"k": [1, 2], "seq": [1, 1]})})
+    assert _jobs_of(spark, engine.run) == 2
+    _land(tmp_path, {"b2.parquet": pa.table({"k": [2, 3], "seq": [2, 2]})})
+    assert _jobs_of(spark, engine.run) == 1
+    assert _sqlite_rows(tmp_path) == [(1, 1), (2, 2), (3, 2)]
+
+    state = StateManager(state_path)
+    assert state.get("landing") == 2 and state.get_pin("landing") is not None
+    state.clear("landing")
+    assert state.get("landing") is None and state.get_pin("landing") is None
 
 
 def test_full_refresh_ignores_stored_cursor(tmp_path, spark, sf_dir):

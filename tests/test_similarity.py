@@ -74,3 +74,31 @@ def test_fold_cosine_max_bit_identical(spark, vec_frames):
     # the identical-vector artifact must be preserved, not clamped
     row0 = kern.loc[kern["c_id"] == 0, "max_cos"].iloc[0]
     assert row0 >= 1.0
+
+
+def test_fold_cosine_max_null_row_and_bad_bench(spark):
+    """A NULL vector row gets a NULL max cosine, as the HOF fold gives;
+    an empty or ragged bench block is rejected before any task runs."""
+    bench = [[1.0, 0.0], [0.6, 0.8]]
+    cdf = spark.createDataFrame(
+        [(0, [0.5, 0.5]), (1, None), (2, [0.0, 2.0])], "c_id long, cv array<double>"
+    )
+    bdf = spark.createDataFrame([(v,) for v in bench], "bv array<double>")
+    expr = (
+        cdf.crossJoin(F.broadcast(bdf))
+        .select("c_id", cosine(F.col("cv"), F.col("bv")).alias("cos"))
+        .groupBy("c_id")
+        .agg(F.max("cos").alias("max_cos"))
+        .orderBy("c_id")
+        .collect()
+    )
+    kern = (
+        fold_cosine_max(cdf, bench, "cv", "max_cos", [("c_id", "long")])
+        .orderBy("c_id")
+        .collect()
+    )
+    assert kern == expr
+    assert kern[1]["max_cos"] is None
+    for bad in ([], [[]], [[1.0, 0.0], [1.0]]):
+        with pytest.raises(ValueError, match="bench_vecs"):
+            fold_cosine_max(cdf, bad, "cv", "max_cos", [("c_id", "long")])
