@@ -30,7 +30,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2.
+
+    Emission order is derived from the CORRECTNESS_r*.json records at the
+    repo root: names whose newest record is oldest come first, so the
+    recorded prefix always holds the names that fall due next.
+    """
     from etl_ml_pipeline_spark.queries import all_queries
 
     return all_queries()

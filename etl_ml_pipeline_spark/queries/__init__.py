@@ -14,7 +14,10 @@ row-count + schema + order-insensitive value hash, so:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,378 +53,40 @@ _MODULES = (
     "pipeline_q",
 )
 
-# Latest round in which the driver recorded a correctness row for each
-# query (static snapshot of CORRECTNESS_r01..r07; every latest record is
-# green as of r07). The driver records only a ~50-entry wall-clock
-# prefix of ``queries()`` in emission order, so emission is triage:
-# never-recorded first (tier 0 — anything added this round), then stale
-# driver rows oldest-first. After r07 the staleness histogram is
-# 46 @ r04, 50 each @ r05/r06/r07 — the 46 r04 names lead the round-8
-# rotation per VERDICT r07 ask #6 so nothing falls >4 rounds stale.
-_LAST_RECORDED = {
-    # --- round 3 (latest record) ---
-    "ann_bruteforce_topk": 3, "ann_ivf_topk": 3, "ann_ivfpq_topk": 3,
-    "ann_lsh_topk": 3, "ann_pq_adc_topk": 3, "cube_status_priority": 3,
-    "dedup_cluster_canonical": 3, "dedup_exact_documents": 3,
-    "dedup_minhash_documents": 3, "dedup_ngram_jaccard": 3,
-    "dedup_simhash_documents": 3, "embedding_label_centroids": 3,
-    "embedding_near_dup_pairs": 3, "embedding_quantize_sq8": 3,
-    "multimodal_image_features": 3, "pack_documents_budget": 3,
-    "pagerank_supply": 3, "sample_hash_documents": 3,
-    "sample_mixture_lang": 3, "sample_stratified_lang": 3,
-    "text_bm25_top_terms": 3, "text_bpe_token_stats": 3,
-    "text_contamination": 3, "text_fingerprint_hist": 3,
-    "text_langid_confusion": 3, "text_model_quality_score": 3,
-    "text_pii_scrub": 3, "text_quality_docs": 3, "text_repetition_stats": 3,
-    "text_token_stats": 3, "text_vocab_topk": 3, "text_winnow_sketch": 3,
-    # --- round 4 (latest record) ---
-    "agg_approx_distinct_parts": 4, "agg_approx_percentile_prices": 4,
-    "agg_distinct_parts": 4, "agg_percentile_prices": 4,
-    "agg_stats_battery": 4, "ann_ivf_sqrtn_topk": 4,
-    "asof_click_purchase": 4, "asof_tolerance_counts": 4,
-    "bollinger_events": 4, "case_bucket_orders": 4, "cdc_current_orders": 4,
-    "chunk_documents_sliding": 4, "corpus_clean_funnel": 4,
-    "diff_order_snapshots": 4, "full_outer_nation_presence": 4,
-    "grouping_sets_order_revenue": 4, "hist_order_prices": 4,
-    "join_anti_inactive_customers": 4, "join_semi_active_customers": 4,
-    "json_extract_events": 4, "ml_feature_stats": 4, "ml_fold_assignment": 4,
-    "ml_target_events": 4, "multimodal_png_decode": 4,
-    "pack_documents_capacity": 4, "pivot_status_by_priority": 4,
-    "q14_promo_share": 4, "q17_small_qty_revenue": 4, "q18_large_orders": 4,
-    "q19_disjunctive_revenue": 4, "q1_pricing_summary": 4,
-    "q22_idle_big_balance": 4, "q2_min_cost_supplier": 4, "q3_top_orders": 4,
-    "q4_priority_exists": 4, "q5_region_revenue": 4,
-    "q6_forecast_revenue": 4, "range_join_purchase_context": 4,
-    "rollup_order_stats": 4, "rsi_macd_events": 4,
-    "scalar_function_battery": 4, "scd2_order_history": 4,
-    "scd2_point_in_time_join": 4, "sessionize_events": 4,
-    "set_lapsed_customers": 4, "set_repeat_customers": 4,
-    "set_union_high_low": 4, "skew_salted_agg_events": 4,
-    "skew_salted_join_events": 4, "tumble_hourly_events": 4,
-    # --- round 5 (latest record) ---
-    "ab_test_events": 5, "ann_recall_contract": 5, "anomaly_mad_events": 5,
-    "attribution_linear_events": 5, "bloom_prune_brand_revenue": 5,
-    "changepoint_cusum_events": 5, "clean_dedup_keep_first": 5,
-    "clean_pipeline_customer": 5, "clean_standardize_cast": 5,
-    "dedup_segments_documents": 5, "drift_psi_events": 5,
-    "embedding_covariance_pca": 5, "forecast_holt_events": 5,
-    "hist_equidepth_prices": 5, "hybrid_search_rrf": 5,
-    "kmeans_lloyd_embeddings": 5, "layout_zorder_prune_stats": 5,
-    "markov_transitions_events": 5, "ml_group_ols_trend": 5,
-    "multimodal_video_frames": 5, "path_top_sequences": 5,
-    "privacy_k_anonymity": 5, "q10_returned_revenue": 5,
-    "q11_important_value": 5, "q12_shipmode_priority": 5,
-    "q13_order_histogram": 5, "q15_top_supplier": 5, "q16_supplier_cnt": 5,
-    "q20_dominant_supplier": 5, "q21_waiting_supplier": 5,
-    "q7_nation_volume": 5, "q8_market_share": 5, "q9_product_profit": 5,
-    "recon_order_totals": 5, "retention_curve_events": 5,
-    "sample_source_cap_documents": 5, "sma_events": 5,
-    "split_leakage_safe_documents": 5, "stream_cusum_replay": 5,
-    "text_bpe_train_merges": 5, "validate_drop_customers": 5,
-    "validate_flag_summary": 5, "window_activity_streaks": 5,
-    "window_dist_functions": 5, "window_first_last": 5,
-    "window_lag_lead_orders": 5, "window_quartile_stats": 5,
-    "window_rank_suppliers": 5, "window_running_total": 5,
-    "window_topk_orders_per_customer": 5,
-}
+# Each round's correctness run records a 50-name prefix of ``queries()``
+# (CORRECTNESS_rNN.json at the repo root), and no recorded name
+# may go more than MAX_STALE rounds without a fresh record. Emission order
+# is derived from those records so the prefix always holds the names that
+# fall due next; no table here needs a hand edit after a round.
+MAX_STALE = 5
+_RECORDS_DIR = Path(__file__).resolve().parents[2]
 
-# Round 6 driver records (the exact key set of CORRECTNESS_r06.json —
-# the 36-name backlog cleared plus the round-6 additions).
-_RECORDED_R06 = {
-    "agg_incremental_refresh", "ann_ivfpq_rerank_topk",
-    "ann_recall_battery", "anomaly_zscore_events",
-    "array_function_battery", "assoc_pairs_events",
-    "boilerplate_strip_documents", "cohort_retention_events",
-    "corpus_stats_battery", "datetime_function_battery",
-    "dedup_fuzzy_ed1_names", "dq_expectations_orders",
-    "feature_winsorize_events", "funnel_events", "graph_triangle_counts",
-    "layout_partition_prune_stats", "multimodal_audio_features",
-    "multimodal_image_ahash_dedup", "multimodal_image_dedup",
-    "null_semantics_battery", "phrase_search_documents",
-    "privacy_erasure_audit", "regexp_function_battery",
-    "resample_gapfill_events", "sample_temperature_lang",
-    "sample_weighted_priority_documents", "seasonality_weekday_events",
-    "shuffle_epoch_documents", "sketch_cms_frequency",
-    "sketch_heavy_hitters_terms", "sketch_rolling_distinct_users",
-    "split_assign_documents", "stream_cdc_view_replay",
-    "stream_dedup_replay", "stream_interval_join_replay",
-    "stream_running_totals_replay", "stream_session_window_replay",
-    "stream_sessionize_replay", "stream_slide_replay",
-    "stream_static_join_replay", "stream_topk_replay",
-    "stream_tumble_replay", "text_novelty_surprise",
-    "text_novelty_trigram", "unpivot_order_metrics",
-    "versioned_time_travel", "window_mom_revenue_growth",
-    "window_new_vs_returning", "window_rolling_autocorr_events",
-    "window_time_range_rolling",
-}
-for _n in _RECORDED_R06:
-    _LAST_RECORDED[_n] = 6
 
-# Round 7 driver records (the exact key set of CORRECTNESS_r07.json —
-# all 50 green: the r03-stale backlog cleared plus the round-7
-# additions and a handful of refreshed r04 rows).
-_RECORDED_R07 = {
-    "ann_bruteforce_topk", "ann_ivf_topk", "ann_ivfpq_topk",
-    "ann_lsh_topk", "ann_pq_adc_topk", "cdc_current_orders",
-    "concurrency_peak_events", "cube_status_priority",
-    "curriculum_order_documents", "dedup_cluster_canonical",
-    "dedup_exact_documents", "dedup_minhash_documents",
-    "dedup_ngram_jaccard", "dedup_semantic_clusters",
-    "dedup_simhash_documents", "embedding_label_centroids",
-    "embedding_near_dup_pairs", "embedding_quantize_sq8",
-    "multimodal_image_features", "pack_documents_budget",
-    "pagerank_supply", "q1_pricing_summary", "rfm_segmentation_events",
-    "sample_dsir_weights", "sample_exact_allocation",
-    "sample_hash_documents", "sample_mixture_lang",
-    "sample_stratified_lang", "scd2_order_history",
-    "scd2_point_in_time_join", "sketch_kll_price_quantiles",
-    "sketch_theta_audience_overlap", "stream_topk_multibatch_replay",
-    "stream_ttl_eviction_replay", "text_bm25_top_terms",
-    "text_bpe_encode_stats", "text_bpe_roundtrip",
-    "text_bpe_token_stats", "text_contamination",
-    "text_fingerprint_hist", "text_gopher_rules",
-    "text_langid_confusion", "text_model_quality_score",
-    "text_pii_scrub", "text_quality_docs", "text_repetition_stats",
-    "text_token_stats", "text_vocab_coverage", "text_vocab_topk",
-    "text_winnow_sketch",
-}
-for _n in _RECORDED_R07:
-    _LAST_RECORDED[_n] = 7
+def last_recorded(
+    records_dir: Path | None = None,
+) -> tuple[int, dict[str, int]]:
+    """The newest round on disk (0 if none) and, per name, the newest round
+    whose record has it as a key. Red rows count: this tracks recency.
+    ``records_dir`` defaults to the repo root."""
+    latest, last = 0, {}
+    for path in Path(records_dir or _RECORDS_DIR).glob("CORRECTNESS_r*.json"):
+        if m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name):
+            rnd = int(m.group(1))
+            latest = max(latest, rnd)
+            for name in json.loads(path.read_text()):
+                last[name] = max(last.get(name, 0), rnd)
+    return latest, last
 
-# Round 8 driver records (the exact key set of CORRECTNESS_r08.json —
-# all 50 green: 4 round-8 additions at tier 0, the theta-matrix
-# rows-only entry, and the 45 r04-stale names refreshed).
-_RECORDED_R08 = {
-    "agg_approx_distinct_parts", "agg_approx_percentile_prices",
-    "agg_distinct_parts", "agg_percentile_prices", "agg_stats_battery",
-    "ann_ivf_sqrtn_topk", "asof_click_purchase", "asof_tolerance_counts",
-    "bollinger_events", "case_bucket_orders", "chunk_documents_sliding",
-    "corpus_clean_funnel", "dedup_exact_substring", "diff_order_snapshots",
-    "full_outer_nation_presence", "graph_label_propagation",
-    "grouping_sets_order_revenue", "hist_order_prices",
-    "join_anti_inactive_customers", "join_semi_active_customers",
-    "json_extract_events", "ml_feature_stats", "ml_fold_assignment",
-    "ml_target_events", "multimodal_png_decode", "pack_documents_capacity",
-    "pivot_status_by_priority", "q14_promo_share", "q17_small_qty_revenue",
-    "q18_large_orders", "q19_disjunctive_revenue", "q22_idle_big_balance",
-    "q2_min_cost_supplier", "q3_top_orders", "q4_priority_exists",
-    "q5_region_revenue", "q6_forecast_revenue", "range_join_purchase_context",
-    "rollup_order_stats", "rsi_macd_events", "sample_token_budget_mixture",
-    "scalar_function_battery", "sessionize_events", "set_lapsed_customers",
-    "set_repeat_customers", "set_union_high_low",
-    "sketch_theta_overlap_matrix", "skew_salted_agg_events",
-    "skew_salted_join_events", "tumble_hourly_events",
-}
-for _n in _RECORDED_R08:
-    _LAST_RECORDED[_n] = 8
 
-# Round 9 driver records (the exact key set of CORRECTNESS_r09.json —
-# all 50 green: the six never-recorded round-8 additions plus 44 of
-# the 50 r05-stale names refreshed).
-_RECORDED_R09 = {
-    "ann_recall_contract", "attribution_linear_events",
-    "bloom_prune_brand_revenue", "changepoint_cusum_events",
-    "clean_dedup_keep_first", "clean_pipeline_customer",
-    "clean_standardize_cast", "dedup_segments_documents",
-    "embedding_covariance_pca", "forecast_holt_events",
-    "hist_equidepth_prices", "hybrid_search_rrf", "json_variant_events",
-    "kmeans_lloyd_embeddings", "layout_bucketed_join_stats",
-    "layout_zorder_prune_stats", "ml_group_ols_trend",
-    "multimodal_video_frames", "privacy_k_anonymity",
-    "q10_returned_revenue", "q11_important_value",
-    "q12_shipmode_priority", "q13_order_histogram", "q15_top_supplier",
-    "q16_supplier_cnt", "q20_dominant_supplier", "q21_waiting_supplier",
-    "q7_nation_volume", "q8_market_share", "q9_product_profit",
-    "recon_order_totals", "recursive_supplier_ancestry",
-    "sample_perplexity_buckets", "sample_source_cap_documents",
-    "skyline_parts_pareto", "sma_events",
-    "split_leakage_safe_documents", "stream_cusum_replay",
-    "stream_dedup_index_replay", "text_bpe_train_merges",
-    "validate_drop_customers", "validate_flag_summary",
-    "window_activity_streaks", "window_dist_functions",
-    "window_first_last", "window_lag_lead_orders",
-    "window_quartile_stats", "window_rank_suppliers",
-    "window_running_total", "window_topk_orders_per_customer",
-}
-for _n in _RECORDED_R09:
-    _LAST_RECORDED[_n] = 9
-
-# Round 10 driver records (the exact key set of CORRECTNESS_r10.json —
-# all 50 green: the six round-10 additions at tier 0, the six r05
-# overflow names at the ≤5-round bound, and 38 r06-era refreshes).
-_RECORDED_R10 = {
-    "ab_test_events", "agg_incremental_refresh", "ann_ivf_incremental_topk",
-    "ann_ivf_persisted_topk", "ann_ivfpq_rerank_topk", "ann_recall_battery",
-    "anomaly_mad_events", "assoc_pairs_events",
-    "boilerplate_strip_documents", "corpus_stats_battery",
-    "dedup_fuzzy_ed1_names", "drift_psi_events", "feature_winsorize_events",
-    "graph_triangle_counts", "markov_transitions_events",
-    "multimodal_audio_features", "multimodal_image_ahash_dedup",
-    "multimodal_image_dedup", "path_top_sequences",
-    "phrase_search_documents", "privacy_erasure_audit",
-    "resample_gapfill_events", "retention_curve_events",
-    "sample_temperature_lang", "sample_weighted_priority_documents",
-    "shuffle_epoch_documents", "sketch_cms_frequency",
-    "sketch_heavy_hitters_terms", "sketch_rolling_distinct_users",
-    "split_assign_documents", "stream_cdc_view_replay",
-    "stream_dedup_replay", "stream_interval_join_replay",
-    "stream_running_totals_replay", "stream_session_window_replay",
-    "stream_sessionize_replay", "stream_slide_replay",
-    "stream_static_join_replay", "stream_topk_replay",
-    "stream_tumble_replay", "text_novelty_surprise", "text_novelty_trigram",
-    "training_data_prep_e2e", "unpivot_order_metrics",
-    "url_canonical_dedup", "url_host_dedup_stats",
-    "url_tracking_scrub_stats", "versioned_time_travel",
-    "window_mom_revenue_growth", "window_time_range_rolling",
-}
-for _n in _RECORDED_R10:
-    _LAST_RECORDED[_n] = 10
-
-# Round 11 driver records (the exact key set of CORRECTNESS_r11.json —
-# all 50 green: the 7 round-11 additions at tier 0, the 12 r06-era
-# names at the ≤5-round bound, and 31 r07-era refreshes).
-_RECORDED_R11 = {
-    "ann_ivf_delete_topk", "ann_ivf_update_topk", "anomaly_zscore_events",
-    "array_function_battery", "cdc_current_orders",
-    "cohort_retention_events", "concurrency_peak_events",
-    "datetime_function_battery", "dedup_cluster_canonical",
-    "dedup_exact_documents", "dedup_minhash_documents",
-    "dedup_ngram_jaccard", "dedup_semantic_clusters",
-    "dedup_simhash_documents", "dq_expectations_orders", "funnel_events",
-    "layout_partition_prune_stats", "null_semantics_battery",
-    "q1_pricing_summary", "regexp_function_battery", "scd2_order_history",
-    "scd2_point_in_time_join", "seasonality_weekday_events",
-    "sketch_kll_price_quantiles", "sketch_theta_audience_overlap",
-    "stream_late_data_window_replay", "stream_late_dedup_eviction_replay",
-    "stream_late_join_replay", "stream_late_outer_join_replay",
-    "stream_topk_multibatch_replay", "stream_ttl_eviction_replay",
-    "text_bm25_top_terms", "text_bpe_encode_stats", "text_bpe_roundtrip",
-    "text_bpe_token_stats", "text_contamination", "text_fingerprint_hist",
-    "text_gopher_rules", "text_langid_confusion",
-    "text_model_quality_score", "text_pii_scrub", "text_quality_docs",
-    "text_repetition_stats", "text_token_stats", "text_vocab_coverage",
-    "text_vocab_topk", "text_winnow_sketch", "url_blocklist_stats",
-    "window_new_vs_returning", "window_rolling_autocorr_events",
-}
-for _n in _RECORDED_R11:
-    _LAST_RECORDED[_n] = 11
-
-# Round 12 driver records (the exact key set of CORRECTNESS_r12.json —
-# 49 green + the documented rows-only theta matrix: the 12 round-12
-# additions at tier 0, the 19 r07-overflow names at the ≤5-round
-# bound, and 17 r08-era refreshes + 2 r09-era rows the driver pulled
-# forward).
-_RECORDED_R12 = {
-    "agg_approx_distinct_parts", "agg_approx_percentile_prices",
-    "agg_distinct_parts", "agg_percentile_prices", "agg_stats_battery",
-    "ann_bruteforce_topk", "ann_filtered_topk", "ann_index_stats",
-    "ann_ivf_topk", "ann_ivfpq_topk", "ann_lsh_topk", "ann_pq_adc_topk",
-    "cube_status_priority", "curriculum_order_documents",
-    "dedup_cross_snapshot_delta", "diff_order_snapshots",
-    "embedding_drift_snapshots", "embedding_label_centroids",
-    "embedding_near_dup_pairs", "embedding_quantize_sq8",
-    "feature_store_snapshot", "hist_order_prices",
-    "join_anti_inactive_customers", "join_semi_active_customers",
-    "layout_compaction_plan", "multimodal_image_features",
-    "pack_documents_budget", "pagerank_supply", "privacy_dp_group_counts",
-    "q3_top_orders", "q5_region_revenue", "q6_forecast_revenue",
-    "quality_calibration_bins", "rfm_segmentation_events",
-    "rollup_order_stats", "sample_dsir_weights", "sample_exact_allocation",
-    "sample_hash_documents", "sample_mixture_lang",
-    "sample_stratified_lang", "set_lapsed_customers",
-    "set_repeat_customers", "set_union_high_low",
-    "sft_episode_construction", "sketch_theta_overlap_matrix",
-    "skew_key_diagnosis_events", "split_decontamination_stats",
-    "stream_decontam_replay", "text_vocab_growth_curve",
-    "training_data_prep_decontam_e2e",
-}
-for _n in _RECORDED_R12:
-    _LAST_RECORDED[_n] = 12
-
-# Round 13 driver records (the exact key set of CORRECTNESS_r13.json —
-# all 50 green: the 6 round-13 additions at tier 0, the r08-era names
-# at the ≤5-round bound, and r09-era refreshes).
-_RECORDED_R13 = {
-    "ann_ivf_sqrtn_topk", "asof_click_purchase", "asof_tolerance_counts",
-    "bollinger_events", "case_bucket_orders", "chunk_documents_sliding",
-    "context_length_planning", "corpus_clean_funnel",
-    "decontam_gram_index_replay", "dedup_exact_substring",
-    "dedup_rate_by_source", "full_outer_nation_presence",
-    "graph_label_propagation", "grouping_sets_order_revenue",
-    "hist_equidepth_prices", "json_extract_events", "json_variant_events",
-    "ml_feature_stats", "ml_fold_assignment", "ml_target_events",
-    "multimodal_png_decode", "pack_documents_capacity",
-    "pack_ffd_documents", "pivot_status_by_priority",
-    "q12_shipmode_priority", "q14_promo_share", "q16_supplier_cnt",
-    "q17_small_qty_revenue", "q18_large_orders", "q19_disjunctive_revenue",
-    "q20_dominant_supplier", "q22_idle_big_balance", "q2_min_cost_supplier",
-    "q4_priority_exists", "q7_nation_volume", "q8_market_share",
-    "q9_product_profit", "quality_scorer_agreement",
-    "range_join_purchase_context", "recon_order_totals",
-    "recursive_supplier_ancestry", "rsi_macd_events",
-    "sample_epoch_allocation", "sample_token_budget_mixture",
-    "scalar_function_battery", "sessionize_events",
-    "skew_salted_agg_events", "skew_salted_join_events",
-    "skyline_parts_pareto", "tumble_hourly_events",
-}
-for _n in _RECORDED_R13:
-    _LAST_RECORDED[_n] = 13
-
-# Round 14 driver records (the exact key set of CORRECTNESS_r14.json —
-# all 50 green: the 10 round-14 additions at tier 0, the theta-matrix
-# tier-1 pin (first hash-checked row), and the 39 r09 names at the
-# ≤5-round bound). NOTE: the 7 r10 refreshes ROADMAP budgeted for this
-# prefix did NOT fit — 10 + 1 + 39 filled all 50 slots — so the r10
-# tier below stays at its full 50 names.
-_RECORDED_R14 = {
-    "ann_mmr_rerank_topk", "ann_recall_contract",
-    "attribution_linear_events", "bloom_prune_brand_revenue",
-    "changepoint_cusum_events", "clean_dedup_keep_first",
-    "clean_pipeline_customer", "clean_standardize_cast",
-    "crawl_frontier_schedule", "dedup_images_phash",
-    "dedup_images_phash_replay", "dedup_segments_documents",
-    "embedding_covariance_pca", "forecast_holt_events",
-    "hybrid_search_rrf", "kmeans_lloyd_embeddings",
-    "layout_bucketed_join_stats", "layout_zorder_prune_stats",
-    "mixture_doremi_weights", "ml_group_ols_trend",
-    "multimodal_video_frames", "pack_attention_boundary_stats",
-    "preference_pair_construction", "privacy_k_anonymity",
-    "q10_returned_revenue", "q11_important_value", "q13_order_histogram",
-    "q15_top_supplier", "q21_waiting_supplier", "retrieval_eval_metrics",
-    "sample_perplexity_buckets", "sample_source_cap_documents",
-    "semantic_decontam_stats", "sft_loss_masking_stats",
-    "sketch_theta_overlap_matrix", "sma_events",
-    "split_leakage_safe_documents", "stream_cusum_replay",
-    "stream_dedup_index_replay", "text_bpe_train_merges",
-    "validate_drop_customers", "validate_flag_summary",
-    "window_activity_streaks", "window_dist_functions",
-    "window_first_last", "window_lag_lead_orders",
-    "window_quartile_stats", "window_rank_suppliers",
-    "window_running_total", "window_topk_orders_per_customer",
-}
-for _n in _RECORDED_R14:
-    _LAST_RECORDED[_n] = 14
-
-# Round-15 rotation (VERDICT r14 ask #1) — the rotation is SATURATED.
-# Tier counts after absorbing r14: 50@r10, 50@r11, 49@r12, 50@r13,
-# 50@r14 = 249 names, and the driver records exactly 50 rows/round, so
-# the 5-round staleness window has capacity 5*50 = 250. The r14 prefix
-# had no room for the 7 r10 refreshes ROADMAP planned (VERDICT r14
-# assumed 43 r10 names remain; the actual CORRECTNESS_r14 key set shows
-# all 50 r10 names still stand). Therefore the round-15 prefix must be
-# EXACTLY the 50 r10-era names — zero slots for additions — and any
-# round-15 catalog addition is pinned at tier 10.5 below: behind the
-# whole r10 cohort (so the bound holds at r15) and ahead of the r11
-# cohort (so additions lead the first free slot — 1 opens at r17 when
-# the 49-name r12 tier comes due). Enforced by precommit check #6.
-_ADDED_R15: set[str] = {
-    "ann_mmr_ivf_topk",
-    "semantic_decontam_shortlist_stats",
-    "crawl_ingest_e2e",
-    "dedup_audio_fingerprint",
-}
-for _n in _ADDED_R15:
-    _LAST_RECORDED[_n] = 10.5
+def emission_keys(
+    names: Iterable[str], records_dir: Path | None = None
+) -> dict[str, float]:
+    """Sort key per name: the newest round that recorded it. A name never
+    recorded gets ``latest - MAX_STALE + 0.5``: just behind the names the
+    next record must refresh, ahead of everything else. With no records at
+    all every key is equal, so a stable sort keeps module order."""
+    latest, last = last_recorded(records_dir)
+    return {n: last.get(n, latest - MAX_STALE + 0.5) for n in names}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -432,14 +97,9 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             if k in out:
                 raise ValueError(f"duplicate query name {k!r} in {name}")
             out[k] = v
-    # Triage order (stable within each tier): never-driver-recorded
-    # queries first (tier -1 = last round's late additions, tier 0 =
-    # anything added this round), then stale driver rows oldest first
-    # (r05 < r06 < r07 < r08). Round 9: 6 tier(-1) + ~44 of the 50
-    # r05-stale names fill the ~50-entry prefix; the overflow r05
-    # names lead round 10 under the ≤5-rounds-stale contract.
-    names = sorted(out, key=lambda k: _LAST_RECORDED.get(k, 0))
-    return {k: out[k] for k in names}
+    # Stable sort: ties (and a checkout with no records) keep module order.
+    keys = emission_keys(out)
+    return {k: out[k] for k in sorted(out, key=keys.__getitem__)}
 
 
 def all_oracles() -> dict[str, str]:

@@ -256,10 +256,11 @@ def semantic_decontam_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_double(F.col("embedding")).alias("cv"),
         "label",
     )
+    # leak rows take negative ids, disjoint from every base vec_id >= 0
     injected = emb.filter(
         (F.col("vec_id") < 40) & (F.col("vec_id") % 4 == 0)
     ).select(
-        (F.col("vec_id") + 200000).alias("c_id"),
+        (F.lit(-1) - F.col("vec_id")).alias("c_id"),
         F.transform(as_double(F.col("embedding")), lambda x: x * 2.0).alias("cv"),
         "label",
     )
@@ -280,7 +281,7 @@ def semantic_decontam_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per = scored.groupBy("c_id", "label").agg(F.max("cos").alias("max_cos"))
     hit = F.col("max_cos") >= _SEM_DECON_THR
-    inj = F.col("c_id") >= 200000
+    inj = F.col("c_id") < 0
     return (
         per.groupBy("label")
         .agg(
@@ -304,7 +305,7 @@ base AS (
   FROM embeddings WHERE vec_id >= 40
 ),
 injected AS (
-  SELECT vec_id + 200000 AS c_id,
+  SELECT -1 - vec_id AS c_id,
          list_transform(embedding::DOUBLE[], x -> x * 2.0) AS cv, label
   FROM embeddings WHERE vec_id < 40 AND vec_id % 4 = 0
 ),
@@ -318,9 +319,9 @@ SELECT label,
        count(*) AS n_corpus,
        CAST(sum(CASE WHEN max_cos >= {_SEM_DECON_THR} THEN 1 ELSE 0 END)
             AS BIGINT) AS n_contaminated,
-       CAST(sum(CASE WHEN c_id >= 200000 THEN 1 ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN c_id < 0 THEN 1 ELSE 0 END) AS BIGINT)
          AS n_injected,
-       coalesce(min(CASE WHEN c_id >= 200000
+       coalesce(min(CASE WHEN c_id < 0
                          THEN max_cos >= {_SEM_DECON_THR} END), TRUE)
          AS all_injected_caught
 FROM per
@@ -381,10 +382,11 @@ def semantic_decontam_shortlist_stats(
         as_double(F.col("embedding")).alias("cv"),
         "label",
     )
+    # leak rows take negative ids, disjoint from every base vec_id >= 0
     injected = emb.filter(
         (F.col("vec_id") < 40) & (F.col("vec_id") % 4 == 0)
     ).select(
-        (F.col("vec_id") + 200000).alias("c_id"),
+        (F.lit(-1) - F.col("vec_id")).alias("c_id"),
         F.transform(as_double(F.col("embedding")), lambda x: x * 2.0).alias("cv"),
         "label",
     )
@@ -436,7 +438,7 @@ def semantic_decontam_shortlist_stats(
             "hit_short"
         ),
     )
-    inj = F.col("c_id") >= 200000
+    inj = F.col("c_id") < 0
     return (
         per.groupBy("label")
         .agg(
@@ -492,7 +494,7 @@ base AS (
   FROM embeddings WHERE vec_id >= 40
 ),
 injected AS (
-  SELECT vec_id + 200000 AS c_id,
+  SELECT -1 - vec_id AS c_id,
          list_transform(embedding::DOUBLE[], x -> x * 2.0) AS cv, label
   FROM embeddings WHERE vec_id < 40 AND vec_id % 4 = 0
 ),
@@ -529,9 +531,9 @@ SELECT label,
          AS n_contam_exact,
        CAST(sum(CASE WHEN hit_short THEN 1 ELSE 0 END) AS BIGINT)
          AS n_contam_shortlist,
-       CAST(sum(CASE WHEN c_id >= 200000 THEN 1 ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN c_id < 0 THEN 1 ELSE 0 END) AS BIGINT)
          AS n_injected,
-       coalesce(min(CASE WHEN c_id >= 200000 THEN hit_short END), TRUE)
+       coalesce(min(CASE WHEN c_id < 0 THEN hit_short END), TRUE)
          AS all_injected_caught,
        CAST(CASE WHEN sum(CASE WHEN hit_exact THEN 1 ELSE 0 END) > 0
             THEN sum(CASE WHEN hit_exact AND hit_short THEN 1 ELSE 0 END)

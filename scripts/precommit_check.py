@@ -1,4 +1,5 @@
-"""Fast catalog-consistency gate (installed as .git/hooks/pre-commit).
+"""Fast catalog-consistency gate: run ``python scripts/precommit_check.py``
+before committing a catalog change (tests/test_cli.py runs it too).
 
 Rounds 6 and 7 both shipped a red pytest for the same reason: a final
 commit registered a new catalog query without bumping the count pin in
@@ -9,10 +10,15 @@ JVM, no JDBC) so it runs in a couple of seconds:
 1. live catalog size == the ``len(qs) == N`` pin in tests/test_cli.py;
 2. CATALOG.md data-row count == live catalog size (and its names match);
 3. every query has an oracle entry or is a documented rows-only check;
-4. the emission-triage invariant (tiers non-decreasing) holds.
+4. emission order is non-decreasing in ``queries.emission_keys``;
+5. every query has a green row in scripts/sf1_diff.json;
+6. after the next simulated 50-name record, no recorded name is more than
+   ``queries.MAX_STALE`` rounds stale (rounds from ``queries.last_recorded``,
+   which reads the CORRECTNESS_r*.json records);
+7. README.md's "N named queries" line matches the live catalog.
 
 Escape hatch for genuinely unrelated emergency commits:
-``PRECOMMIT_SKIP=1 git commit ...``.
+``PRECOMMIT_SKIP=1 python scripts/precommit_check.py``.
 """
 
 from __future__ import annotations
@@ -43,9 +49,11 @@ def main() -> None:
         return
 
     from etl_ml_pipeline_spark.queries import (
-        _LAST_RECORDED,
+        MAX_STALE,
         all_oracles,
         all_queries,
+        emission_keys,
+        last_recorded,
     )
 
     qs, oracles = all_queries(), all_oracles()
@@ -90,9 +98,10 @@ def main() -> None:
         )
 
     # 4. triage order sanity
-    tiers = [_LAST_RECORDED.get(k, 0) for k in qs]
+    keys = emission_keys(qs)
+    tiers = [keys[k] for k in qs]
     if tiers != sorted(tiers):
-        fail("emission triage order violated (tiers not non-decreasing)")
+        fail("emission triage order violated (keys not non-decreasing)")
 
     # 5. sf1-differential coverage (VERDICT r08 ask #2): every catalog
     # query must have a row in scripts/sf1_diff.json. A new query
@@ -124,32 +133,23 @@ def main() -> None:
     # 6. staleness contract (VERDICT r09 ask #4): simulate the next
     # driver record — the first PREFIX names in emission order get a
     # fresh row — then fail if any already-recorded name would end up
-    # >MAX_STALE rounds stale. The current round is inferred from the
-    # newest CORRECTNESS_r*.json on disk (the next record is round+1).
-    PREFIX, MAX_STALE = 50, 5
-    recorded_rounds = [
-        int(m.group(1))
-        for p in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    if recorded_rounds:
-        next_round = max(recorded_rounds) + 1
-        simulated = dict(_LAST_RECORDED)
-        for name in list(qs)[:PREFIX]:
-            simulated[name] = next_round
+    # >MAX_STALE rounds stale. The next record is the newest on disk + 1.
+    PREFIX = 50
+    latest, last = last_recorded()
+    if latest:
+        next_round = latest + 1
+        fresh = set(list(qs)[:PREFIX])
         overdue = sorted(
-            (name, simulated[name])
-            for name in qs
-            if simulated.get(name, 0) >= 1
-            and next_round - simulated[name] > MAX_STALE
+            (name, rnd)
+            for name, rnd in last.items()
+            if name in qs and name not in fresh and next_round - rnd > MAX_STALE
         )
         if overdue:
             fail(
                 f"staleness contract broken: after the simulated round-"
                 f"{next_round} record ({PREFIX}-name prefix), these names "
-                f"exceed {MAX_STALE} rounds stale: {overdue} — refresh "
-                "_LAST_RECORDED from the latest CORRECTNESS json and/or "
-                "reorder the prefix"
+                f"exceed {MAX_STALE} rounds stale: {overdue} — more names are "
+                f"due than the {PREFIX}-name prefix holds"
             )
 
     # 7. README catalog-count pin (VERDICT r13 ask #3): README.md's

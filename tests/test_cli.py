@@ -155,41 +155,94 @@ def test_query_catalog_counts():
     assert sorted(doc_names) == sorted(qs)
 
 
-def test_query_emission_triage_order():
-    """The driver records only a ~50-entry wall-clock prefix of queries()
-    in emission order, so emission is triaged oldest-driver-record
-    first. Round 15 is the saturated case: the oldest tier is the FULL
-    50-name r10 cohort (the r14 prefix had no room for the refreshes
-    ROADMAP budgeted), so the prefix must be exactly those 50 names and
-    round-15 additions are pinned at tier 10.5 — behind the whole r10
-    cohort, ahead of the 50 r11 names that come due at r16."""
+def test_query_emission_triage_order(tmp_path, monkeypatch):
+    """Each round's correctness run records a 50-name prefix of
+    queries(), and no recorded name may go more than MAX_STALE rounds
+    without a fresh record. Emission order is derived from the committed
+    CORRECTNESS_r*.json files, so these properties hold for whatever
+    records are on disk, including ones later rounds write."""
+    import shutil
+
+    from etl_ml_pipeline_spark import queries
     from etl_ml_pipeline_spark.queries import (
-        _ADDED_R15,
-        _LAST_RECORDED,
+        MAX_STALE,
         all_queries,
+        emission_keys,
+        last_recorded,
     )
 
-    keys = list(all_queries())
-    tier = lambda k: _LAST_RECORDED.get(k, 0)
-    tiers = [tier(k) for k in keys]
-    assert tiers == sorted(tiers)
-    # nothing may sort ahead of the r10 cohort: every catalog name has
-    # an explicit tier >= 10 (a forgotten pin would default to 0 and
-    # steal a prefix slot from a name at the staleness bound)
-    assert min(tiers) == 10
-    # the 50 r10-era names fill the 50-slot prefix exactly
-    r10 = [k for k in keys if tier(k) == 10]
-    assert len(r10) == 50
-    assert keys[:50] == r10
-    # round-15 additions ride at 10.5, directly behind the cohort, so
-    # they lead the first free slot (r17, when the 49-name r12 tier
-    # comes due) without displacing anything at the bound
-    added = [k for k in keys if tier(k) == 10.5]
-    assert sorted(added) == sorted(_ADDED_R15)
-    assert keys[50 : 50 + len(added)] == added
-    assert _LAST_RECORDED.get(keys[-1]) == 14
-    # every triage name must still exist in the catalog (no stale entries)
-    assert set(_LAST_RECORDED) <= set(keys)
+    names = list(all_queries())
+    latest, last = last_recorded()
+    assert latest >= 1, "no CORRECTNESS_r*.json at the repo root"
+    # every recorded name is still in the catalog (no stale entries)
+    assert set(last) <= set(names)
+    # the order is non-decreasing in the derived key, newest record last
+    key = emission_keys(names)
+    assert [key[n] for n in names] == sorted(key.values())
+    assert key[names[-1]] == latest
+    # every name due at the next record leads, then the never-recorded
+    due = [n for n in names if n in last and latest + 1 - last[n] > MAX_STALE]
+    unrecorded = [n for n in names if n not in last]
+    assert names[: len(due)] == due
+    assert names[len(due) : len(due) + len(unrecorded)] == unrecorded
+    # simulate the next 2 * MAX_STALE rounds, each recording the emitted
+    # 50-name prefix: no name ever exceeds the bound, and none starves
+    for path in queries._RECORDS_DIR.glob("CORRECTNESS_r*.json"):
+        shutil.copy(path, tmp_path)
+    monkeypatch.setattr(queries, "_RECORDS_DIR", tmp_path)
+    for rnd in range(latest + 1, latest + 1 + 2 * MAX_STALE):
+        prefix = list(all_queries())[:50]
+        record = tmp_path / f"CORRECTNESS_r{rnd:02d}.json"
+        record.write_text(json.dumps(dict.fromkeys(prefix, {})))
+        _, last = last_recorded()
+        stale = {n: rnd - r for n, r in last.items() if rnd - r > MAX_STALE}
+        assert not stale, (rnd, stale)
+    assert set(last) == set(names)
+
+
+def test_emission_keys_from_records(tmp_path):
+    """Pins the derivation on tiny synthetic records: a due name, a tie
+    kept in module order, a red row, a never-recorded name, a recorded
+    name no longer in the catalog, and the no-records case."""
+    from etl_ml_pipeline_spark.queries import emission_keys
+
+    names = ["e", "d", "c", "b", "f", "a"]
+    key = emission_keys(names, tmp_path)
+    assert len(set(key.values())) == 1
+    assert sorted(names, key=key.get) == names
+    green = {"hash_match": True}
+    records = {
+        1: {"a": green, "b": green, "c": green},
+        2: {"b": green, "f": green},
+        6: {"c": {"hash_match": False}, "e": green},
+        7: {"e": green, "gone": green},
+    }
+    for rnd, rows in records.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    key = emission_keys(names, tmp_path)
+    # latest = 7: a and b are due at r08, d (never recorded) sits at 2.5
+    assert key == {"e": 7, "d": 2.5, "c": 6, "b": 2, "f": 2, "a": 1}
+    assert sorted(names, key=key.get) == ["a", "b", "f", "d", "c", "e"]
+
+
+def test_precommit_check_passes():
+    """The catalog-consistency gate is import-only (no JVM), so the
+    suite runs it as is: pins, CATALOG.md, oracle and sf1 coverage,
+    emission order, staleness and README must all agree."""
+    import os
+    import subprocess
+    import sys
+
+    repo = Path(__file__).resolve().parents[1]
+    env = {k: v for k, v in os.environ.items() if k != "PRECOMMIT_SKIP"}
+    res = subprocess.run(
+        [sys.executable, str(repo / "scripts" / "precommit_check.py")],
+        capture_output=True,
+        text=True,
+        env=env,
+    )
+    assert res.returncode == 0, res.stderr
+    assert "precommit_check: OK" in res.stdout
 
 
 def test_list_modules_surfaces_unavailable(monkeypatch):
