@@ -839,16 +839,6 @@ def _winnow_list(hashes: list[int], w: int) -> list[int]:
     return sorted(mins)
 
 
-def kgram_hashes(col: Column, k: int = 8) -> Column:
-    """Polynomial hash of every k-char gram (array<bigint> per row)."""
-
-    @F.pandas_udf("array<bigint>")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _kgram_hash_list(t or "", k))
-
-    return _udf(col)
-
-
 def winnow_fingerprints(col: Column, k: int = 8, w: int = 4) -> Column:
     """Winnowing sketch: guarantees every match of length >= w+k-1
     shares a fingerprint — the property that makes the sketch a

@@ -3,9 +3,10 @@
 The driver corpus has no duplicates, so every query first constructs a
 deterministic dup'd corpus the oracle replicates:
 
-- exact dups:  docs with doc_id % 7 == 0 re-inserted as doc_id + 1_000_000
-- near dups:   docs with doc_id % 11 == 0 re-inserted as doc_id + 2_000_000
-               with two extra tokens appended (high-but-<1 Jaccard)
+- exact dups:  docs with doc_id % 7 == 0 re-inserted as doc_id + _DUP_OFFSET
+- near dups:   docs with doc_id % 11 == 0 re-inserted as
+               doc_id + 2 * _DUP_OFFSET with two extra tokens appended
+               (high-but-<1 Jaccard)
 
 Because every hash derives from md5 (``operators.text.token_hash60``),
 the *entire* MinHash signature/banding pipeline and the SimHash bit
@@ -32,6 +33,16 @@ from etl_ml_pipeline_spark.operators.dedup import (
 from etl_ml_pipeline_spark.queries.tables import t
 
 
+# Id offset of the injected copies. Far above any base doc_id, so copies
+# never merge with base rows (a 1_000_000 offset did at 1M documents).
+# It is 10**6 modulo 582 (= 2*3*97) and 0 modulo 10**6, so every filter
+# applied after injection (% 2, % 3, % 97, % 1_000_000 < 300 and the
+# `doc_id div 2 % 3` batch split) keeps exactly the rows it kept with
+# the 1_000_000 / 2_000_000 offsets, and base < exact < near id order
+# holds.
+_DUP_OFFSET = 1_000_000 + 291_000_000 * 10_000
+
+
 def _dup_corpus(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFrame:
     """Deterministically dup'd corpus in ONE scan.
 
@@ -50,13 +61,13 @@ def _dup_corpus(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFr
     exact = F.when(
         F.col("doc_id") % 7 == 0,
         F.struct(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), F.col("text").alias("text")
+            (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"), F.col("text").alias("text")
         ),
     )
     near = F.when(
         F.col("doc_id") % 11 == 0,
         F.struct(
-            (F.col("doc_id") + 2_000_000).alias("doc_id"),
+            (F.col("doc_id") + 2 * _DUP_OFFSET).alias("doc_id"),
             F.concat(F.col("text"), F.lit(" extra tail")).alias("text"),
         ),
     )
@@ -76,12 +87,13 @@ def _dup_corpus(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFr
     return corpus
 
 
-_DUP_CORPUS_SQL = """
+_DUP_CORPUS_SQL = f"""
   SELECT doc_id, text FROM documents
   UNION ALL
-  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
+  SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 7 = 0
   UNION ALL
-  SELECT doc_id + 2000000, text || ' extra tail' FROM documents WHERE doc_id % 11 = 0
+  SELECT doc_id + {2 * _DUP_OFFSET}, text || ' extra tail'
+  FROM documents WHERE doc_id % 11 = 0
 """
 
 

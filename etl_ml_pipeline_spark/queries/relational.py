@@ -312,7 +312,7 @@ ORDER BY c_custkey
 # with a gid column, then two aggregate phases) — measured at sf0.1 /
 # local[32] that loses to computing each distinct as its own narrow
 # (suppkey, value) pre-aggregate and joining the per-suppkey results:
-# median 1.22s vs 1.78s (scripts/distinct_experiment.py). Why: each
+# median 1.22s vs 1.78s (one-session A/B, commit 5f5f369). Why: each
 # pre-aggregate shuffles only its own 2-column pairs after map-side
 # dedup, while Expand ships 3x the full rows; and the three aggregates
 # all come out hash-partitioned on l_suppkey, so the joins add no

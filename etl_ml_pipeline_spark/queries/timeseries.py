@@ -900,9 +900,9 @@ def _dedup_index_run(
     spark: SparkSession, sf_dir: str, compact_every: int | None
 ) -> DataFrame:
     """The 3-batch MinHash-index ingest loop, parameterized on the
-    compaction cadence — shared by the catalog query (compact_every=2)
-    and scripts/compaction_ladder.py's maintenance-cost A/B (on vs
-    off at each ladder rung; verdicts are invariant by contract)."""
+    compaction cadence — the catalog query runs compact_every=2; the
+    maintenance-cost A/B of on vs off at each ladder rung is recorded in
+    scripts/compaction_ladder.json (verdicts are invariant by contract)."""
     import os
     import uuid
 

@@ -508,35 +508,3 @@ def write_stream_cdc_view(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def read_kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-    value_schema: str | None = None,
-):
-    """Kafka structured-streaming source (config-only wrapper).
-
-    Returns value-parsed rows when ``value_schema`` is given (JSON
-    payloads), else the raw (key, value, topic, partition, offset,
-    timestamp) frame. Untestable offline — no broker in this container —
-    but the entire difference from the file-source tests is this reader
-    config; every downstream operator (windows, dedup, CDC view,
-    stateful totals) is source-agnostic.
-    """
-    from pyspark.sql import functions as F
-
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    if value_schema is None:
-        return raw
-    return raw.select(
-        F.from_json(F.col("value").cast("string"), value_schema).alias("v")
-    ).select("v.*")

@@ -1,12 +1,10 @@
-"""Record the synthetic-sf1 bench in the driver's BENCH_r*.json format.
+"""Record the bench at the synthetic sf1 (.sf1, 10x sf0.1) with both of
+bench.py's tail lines, per-query medians and the summary, so records at
+two core counts separate parallel queries from driver-bound ones.
 
-Runs bench.py against /root/repo/.sf1 (generated by make_sf1.py — 10x
-sf0.1 by key-shifted replication) and wraps the JSON line exactly the
-way the round driver wraps BENCH_r{N}.json, so rounds can diff scale
-behavior mechanically (VERDICT r04 item 8).
-
-Usage: python scripts/bench_sf1.py [out_path]
-       (default /root/repo/BENCH_sf1_r05.json)
+Usage: [SPARK_GRAFT_CPUS=N] python scripts/bench_sf1.py [OUT.json]
+       (default BENCH_sf1.json; cores default to nproc; builds .sf1 with
+       make_sf1.py when it is missing)
 """
 
 from __future__ import annotations
@@ -17,42 +15,40 @@ import subprocess
 import sys
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parents[1]
+from _common import NPROC, REPO, stamp
+
 SF1 = REPO / ".sf1"
 
 
 def main() -> None:
-    out_path = Path(sys.argv[1]) if len(sys.argv) > 1 else REPO / "BENCH_sf1_r05.json"
+    out_path = Path(sys.argv[1]) if len(sys.argv) > 1 else REPO / "BENCH_sf1.json"
     if not SF1.exists():
-        print("generating .sf1 (make_sf1.py)...", file=sys.stderr)
-        subprocess.run(
-            [sys.executable, str(REPO / "scripts" / "make_sf1.py")], check=True
-        )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        subprocess.run([sys.executable, str(REPO / "scripts" / "make_sf1.py")],
+                       check=True)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(NPROC))
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(SF1), SPARK_GRAFT_CPUS=cpus)
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "bench.py")],
-        env=env,
-        capture_output=True,
-        text=True,
-    )
-    tail = "\n".join(proc.stdout.strip().splitlines()[-1:])
-    parsed = None
-    try:
-        parsed = json.loads(tail)
-        parsed["sf"] = 1.0  # .sf1 basename parses as "1"; make it explicit
-    except (json.JSONDecodeError, ValueError):
-        pass
-    record = {
+    # cwd=REPO: Spark's Python workers import the engine from their cwd
+    proc = subprocess.run([sys.executable, str(REPO / "bench.py")], cwd=REPO,
+                          env=env, capture_output=True, text=True)
+    parsed = {}
+    for ln in proc.stdout.strip().splitlines()[-2:]:
+        try:
+            d = json.loads(ln)
+        except ValueError:
+            continue
+        d["sf"] = 1.0  # the .sf1 basename parses as "1"; make it explicit
+        parsed[d.get("metric", "?")] = d
+    record = stamp({
         "n": 4,  # bench.py: 1 untimed warm pass + 3 timed (median reported)
         "rc": proc.returncode,
         "cpus": int(cpus),
         "sf": 1.0,
-        "tail": (proc.stderr.strip().splitlines()[-1:] or [""])[0] + "\n" + tail,
-        "parsed": parsed,
-    }
+        "per_query": parsed.get("headline_per_query", {}).get("queries", {}),
+        "summary": parsed.get("headline_summary"),
+    })
     out_path.write_text(json.dumps(record, indent=1))
-    print(json.dumps({"rc": proc.returncode, "value": (parsed or {}).get("value")}))
+    print(json.dumps({"rc": proc.returncode, "cpus": cpus,
+                      "value": (record["summary"] or {}).get("value")}))
 
 
 if __name__ == "__main__":

@@ -7,11 +7,7 @@ Usage: python scripts/gen_catalog.py
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
-REPO = Path(__file__).resolve().parents[1]
-sys.path.insert(0, str(REPO))
+from _common import REPO, session
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,12 +16,8 @@ def main() -> None:
     import importlib
 
     from etl_ml_pipeline_spark.queries import _MODULES, all_oracles
-    from etl_ml_pipeline_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="gen_catalog", master="local[8]", shuffle_partitions=8
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("gen_catalog")
     oracles = all_oracles()
     lines = [
         "# Query catalog",
@@ -34,7 +26,7 @@ def main() -> None:
         "`__spark_entry__.queries()` with its module, oracle kind, and "
         "output schema at sf0.001. All entries are hash-compared against "
         "their DuckDB oracle SQL by the round driver and by "
-        "`scripts/sf1_diff.py`.",
+        "`scripts/diff.py`.",
         "",
         "| # | Query | Module | Oracle | Output schema |",
         "|---|---|---|---|---|",

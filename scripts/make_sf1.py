@@ -10,8 +10,8 @@ instead of collapsing into 10-way exact-duplicate clusters; embeddings
 replicate as-is (ANN list sizes scale linearly either way).
 
 Usage: python scripts/make_sf1.py [out_dir] [n_replicas]
-       (defaults /root/repo/.sf1, 10; n_replicas=100 builds an
-       sf10-equivalent ladder rung, e.g. scripts/scale_ladder.py)
+       (defaults <repo>/.sf1, 10; n_replicas=100 builds an
+       sf10-equivalent rung for scripts/sweep.py, e.g. .sf10)
 """
 
 from __future__ import annotations
@@ -19,11 +19,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-from pyspark.sql import DataFrame, functions as F  # noqa: E402
-
-from etl_ml_pipeline_spark.session import get_spark  # noqa: E402
+from _common import REPO, session
+from pyspark.sql import DataFrame, functions as F
 
 SRC = "/root/testdata/sf0.1"
 N_REPLICAS = 10
@@ -98,7 +95,7 @@ def _compact(tmp_dir: Path, dest: Path) -> None:
 
 
 def main(out_dir: str, n_replicas: int = N_REPLICAS) -> None:
-    spark = get_spark(app_name="make_sf1")
+    spark = session("make_sf1")
     strides = _strides(spark)
     print("strides:", strides)
     out = Path(out_dir)
@@ -122,6 +119,6 @@ def main(out_dir: str, n_replicas: int = N_REPLICAS) -> None:
 
 if __name__ == "__main__":
     main(
-        sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.sf1",
+        sys.argv[1] if len(sys.argv) > 1 else str(REPO / ".sf1"),
         int(sys.argv[2]) if len(sys.argv) > 2 else N_REPLICAS,
     )

@@ -15,7 +15,10 @@ JVM, no JDBC) so it runs in a couple of seconds:
 6. after the next simulated 50-name record, no recorded name is more than
    ``queries.MAX_STALE`` rounds stale (rounds from ``queries.last_recorded``,
    which reads the CORRECTNESS_r*.json records);
-7. README.md's "N named queries" line matches the live catalog.
+7. README.md's "N named queries" line matches the live catalog;
+8. scripts/ keeps one tool per job: no round-stamped ``r<N>_*.py`` file,
+   and no script builds its own Spark session or pins a master or driver
+   memory (``_common.session()`` sizes it to the cores present).
 
 Escape hatch for genuinely unrelated emergency commits:
 ``PRECOMMIT_SKIP=1 python scripts/precommit_check.py``.
@@ -106,7 +109,7 @@ def main() -> None:
     # 5. sf1-differential coverage (VERDICT r08 ask #2): every catalog
     # query must have a row in scripts/sf1_diff.json. A new query
     # closes its gap incrementally with
-    #   python scripts/sf1_diff.py --only NAME
+    #   python scripts/diff.py .sf1 --only NAME
     # in the same commit that registers it.
     import json
 
@@ -116,7 +119,7 @@ def main() -> None:
     if uncovered:
         fail(
             f"sf1_diff.json is missing {uncovered} — run "
-            f"'python scripts/sf1_diff.py --only {','.join(uncovered)}' "
+            f"'python scripts/diff.py .sf1 --only {','.join(uncovered)}' "
             "and commit the updated json alongside the catalog change"
         )
     # A present-but-red row is as bad as a missing one (an sf1 run
@@ -127,7 +130,7 @@ def main() -> None:
         fail(
             f"sf1_diff.json has ok=false for {sf1_red} — regenerate .sf1 "
             "(scripts/make_sf1.py) if absent, then "
-            f"'python scripts/sf1_diff.py --only {','.join(sf1_red)}'"
+            f"'python scripts/diff.py .sf1 --only {','.join(sf1_red)}'"
         )
 
     # 6. staleness contract (VERDICT r09 ask #4): simulate the next
@@ -166,9 +169,26 @@ def main() -> None:
                 f"has {len(qs)} — true up README.md in the same commit"
             )
 
+    # 8. one tool per job in scripts/: a new measurement is a flag on
+    # diff/ab/sweep/dump_plans, not a round-stamped copy, and every
+    # session comes from _common.session() so each number is taken on
+    # (and stamped with) the cores present.
+    for path in sorted((REPO / "scripts").glob("*.py")):
+        if re.match(r"r\d+_", path.name):
+            fail(f"scripts/{path.name} is round-stamped — fold it into a tool")
+        src = path.read_text()
+        pinned = re.search(
+            r"local\[|get_spark\(|SparkSession\.builder|spark\.driver\.memory", src
+        )
+        if path.name != "_common.py" and pinned:
+            fail(
+                f"scripts/{path.name} sets up Spark itself ({pinned.group()!r}) "
+                "— take the session from _common.session()"
+            )
+
     print(
         f"precommit_check: OK — catalog {len(qs)} queries, pin + "
-        "CATALOG.md + oracles + staleness + README consistent"
+        "CATALOG.md + oracles + staleness + README + scripts consistent"
     )
 
 

@@ -3,7 +3,7 @@ transformers (imported from /root/reference, untouched) vs this
 engine's Spark operators on identical data and identical configs —
 the BASELINE.md "matches-or-beats single-node throughput" criterion,
 quantified. The reference processes one series per frame and is
-single-threaded; the engine runs every series in one local[32] job.
+single-threaded; the engine runs every series in one Spark job on all cores.
 
 Two legs:
 - indicators: S symbols x D days of OHLCV through the reference
@@ -26,13 +26,12 @@ from __future__ import annotations
 import json
 import sys
 import time
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
-REPO = Path(__file__).resolve().parents[1]
-sys.path.insert(0, str(REPO))
+from _common import NPROC, REPO, session, stamp
+
 sys.path.insert(0, "/root/reference/src")
 
 SMALL = "--small" in sys.argv
@@ -94,13 +93,9 @@ def main() -> None:
 
     from etl_ml_pipeline_spark import plugins  # noqa: F401
     from etl_ml_pipeline_spark.registry import TRANSFORMS
-    from etl_ml_pipeline_spark.session import get_spark
 
     results = {}
-    spark = get_spark(
-        app_name="ref_compare", master="local[32]", shuffle_partitions=64
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("ref_compare")
 
     # ── indicators leg ──────────────────────────────────────────────
     pdf = gen_ohlcv()
@@ -111,7 +106,7 @@ def main() -> None:
         out_rows += len(ref_t.transform(g.drop(columns=["symbol"])))
     ref_sec = time.perf_counter() - t0
 
-    sdf = spark.createDataFrame(pdf).repartition(64, "symbol").persist()
+    sdf = spark.createDataFrame(pdf).repartition(2 * NPROC, "symbol").persist()
     sdf.count()  # cache outside the timed region (reference got its frame free too)
     ours = TRANSFORMS.get("technical_indicators")({"series_col": "symbol"})
     from pyspark.sql import functions as F
@@ -129,7 +124,7 @@ def main() -> None:
         "rows_in": len(pdf),
         "rows_out": out_rows,
         "reference_pandas_sec": round(ref_sec, 2),
-        "spark_local32_sec": round(spark_sec, 2),
+        "spark_sec": round(spark_sec, 2),
         "speedup": round(ref_sec / spark_sec, 2),
     }
     print("indicators:", results["indicators"], flush=True)
@@ -141,7 +136,7 @@ def main() -> None:
     ref_clean = ref_c.transform(mess)
     ref_c_sec = time.perf_counter() - t2
 
-    smess = spark.createDataFrame(mess).repartition(64).persist()
+    smess = spark.createDataFrame(mess).repartition(2 * NPROC).persist()
     smess.count()
     ours_c = TRANSFORMS.get("data_cleaning")(dict(_CLEAN_CFG))
     t3 = time.perf_counter()
@@ -157,7 +152,7 @@ def main() -> None:
         "rows_in": N_CLEAN,
         "rows_out": int(cagg["n"]),
         "reference_pandas_sec": round(ref_c_sec, 2),
-        "spark_local32_sec": round(spark_c_sec, 2),
+        "spark_sec": round(spark_c_sec, 2),
         "speedup": round(ref_c_sec / spark_c_sec, 2),
     }
     print("cleaning:", results["cleaning"], flush=True)
@@ -182,7 +177,7 @@ def main() -> None:
     ref_valid = PydanticValidationTransformer(dict(vcfg)).transform(vdf)
     ref_v_sec = time.perf_counter() - t4
 
-    svdf = spark.createDataFrame(vdf).repartition(64).persist()
+    svdf = spark.createDataFrame(vdf).repartition(2 * NPROC).persist()
     svdf.count()
     t5 = time.perf_counter()
     vres = TRANSFORMS.get("pydantic_validation")(dict(vcfg)).transform(svdf)
@@ -195,15 +190,15 @@ def main() -> None:
         "rows_in": n_val,
         "rows_out": int(vagg["n"]),
         "reference_pandas_sec": round(ref_v_sec, 2),
-        "spark_local32_sec": round(spark_v_sec, 2),
+        "spark_sec": round(spark_v_sec, 2),
         "speedup": round(ref_v_sec / spark_v_sec, 2),
     }
     print("validation:", results["validation"], flush=True)
 
     out = REPO / "REF_COMPARE.json"
-    out.write_text(json.dumps(
+    out.write_text(json.dumps(stamp(
         {"workload": {"symbols": N_SYMBOLS, "days": N_DAYS, "clean_rows": N_CLEAN},
-         "results": results}, indent=1))
+         "results": results}), indent=1))
     print("wrote", out)
 
 

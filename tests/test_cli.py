@@ -245,6 +245,64 @@ def test_precommit_check_passes():
     assert "precommit_check: OK" in res.stdout
 
 
+_REPO = Path(__file__).resolve().parents[1]
+_SF0001 = "/root/testdata/sf0.001"
+
+
+def _run_script(*argv: str):
+    import subprocess
+    import sys
+
+    return subprocess.run(
+        [sys.executable, str(_REPO / "scripts" / argv[0]), *argv[1:]],
+        capture_output=True, text=True, cwd=_REPO,
+    )
+
+
+def test_diff_script_two_names(tmp_path):
+    out = tmp_path / "diff.json"
+    sf1_record = (_REPO / "scripts" / "sf1_diff.json").read_bytes()
+    res = _run_script("diff.py", _SF0001, "--only",
+                      "q1_pricing_summary,q6_forecast_revenue", "--out", str(out))
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert "entry rows:" in res.stdout
+    assert "oracle fails: none (2 compared)" in res.stdout
+    record = json.loads(out.read_text())
+    assert record["summary"]["n_fail"] == 0 and record["summary"]["nproc"] >= 1
+    row = record["results"][_SF0001]["q6_forecast_revenue"]
+    assert row["ok"] and row["sf_dir"] == _SF0001 and row["nproc"] >= 1
+    # Only a run over .sf1 may touch the sf1 record.
+    assert (_REPO / "scripts" / "sf1_diff.json").read_bytes() == sf1_record
+
+
+def test_ab_script_same_code_recheck():
+    import subprocess
+
+    def worktrees() -> str:
+        return subprocess.run(["git", "-C", str(_REPO), "worktree", "list"],
+                              capture_output=True, text=True).stdout
+
+    head = subprocess.run(["git", "-C", str(_REPO), "rev-parse", "HEAD"],
+                          capture_output=True, text=True)
+    if head.returncode:
+        pytest.skip("not a git checkout")
+    before = worktrees()
+    res = _run_script("ab.py", "HEAD", "q6_forecast_revenue", "--sf", _SF0001,
+                      "--pairs", "1")
+    assert res.returncode == 0, res.stderr[-3000:]
+    record = json.loads(res.stdout.splitlines()[-1])
+    row = record["results"]["q6_forecast_revenue"]
+    assert row["rows_equal"] and row["rows"] == {"old": 1, "new": 1}
+    assert [len(p) for p in row["old"]] == [len(p) for p in row["new"]] == [3]
+    assert row["new_wins"] in (0, 1) and record["nproc"] >= 1
+    assert worktrees() == before
+
+
+def test_ab_script_rejects_zero_pairs():
+    res = _run_script("ab.py", "HEAD", "--pairs", "0")
+    assert res.returncode == 2 and "needs at least 1 pair" in res.stderr
+
+
 def test_list_modules_surfaces_unavailable(monkeypatch):
     """Optional-module import failures must be visible in the registry
     dump, not silently absent. (In this container every optional module

@@ -102,3 +102,27 @@ def test_registry_transform_boilerplate(spark):
     out = TRANSFORMS.get("boilerplate_strip")({"seg_words": 2, "max_df": 2})(df)
     rows = {r["doc_id"]: r["clean_text"] for r in out.collect()}
     assert rows == {1: "c d", 2: "x y", 3: "z w"}
+
+
+def test_dup_corpus_ids_unique_past_one_million(spark, tmp_path):
+    """Injected copies of the catalog's dup'd corpus never reuse a base
+    doc_id, on the Spark side or in the DuckDB oracle, even when base ids
+    reach past 1M (doc 7 is copied; 1_000_007 is a base row)."""
+    import duckdb
+    import pandas as pd
+
+    from etl_ml_pipeline_spark.queries.dedup_q import _DUP_CORPUS_SQL, _dup_corpus
+
+    pd.DataFrame(
+        {"doc_id": [7, 1_000_007], "text": ["seven words", "a million seven"]}
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+
+    ids = [r.doc_id for r in _dup_corpus(spark, str(tmp_path)).collect()]
+    assert len(ids) == 3 and len(set(ids)) == 3
+    with duckdb.connect() as con:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/documents.parquet')"
+        )
+        oracle_ids = [r[0] for r in con.sql(_DUP_CORPUS_SQL).fetchall()]
+    assert sorted(oracle_ids) == sorted(ids)
