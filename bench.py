@@ -163,18 +163,12 @@ def cpu_probe() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     probe = cpu_probe()  # before Spark init — see docstring
 
-    from etl_ml_pipeline_spark.session import get_spark
+    from etl_ml_pipeline_spark.session import cores, get_spark
     from etl_ml_pipeline_spark.queries import all_queries
 
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "48g")},
-    )
+    spark = get_spark(app_name="bench")
 
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
@@ -260,8 +254,9 @@ def main() -> None:
     # live headline list). Additions-only: the full record line and the
     # timed region above are byte-identical to r15.
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    n_cores = cores()
     perq_line = json.dumps(
-        {"metric": "headline_per_query", "queries": timings, "sf": sf_val},
+        {"metric": "headline_per_query", "queries": timings, "sf": sf_val, "cores": n_cores},
         separators=(",", ":"),
     )
     summary_line = json.dumps(
@@ -276,6 +271,7 @@ def main() -> None:
             "cpu_probe_sec": probe,
             "value_22q_per_probe": round(v22 / probe, 3),
             "sf": sf_val,
+            "cores": n_cores,
         },
         separators=(",", ":"),
     )
@@ -290,6 +286,7 @@ def main() -> None:
                 },
                 "note": "22q subset; full map exceeded the 2000-char tail",
                 "sf": sf_val,
+                "cores": n_cores,
             },
             separators=(",", ":"),
         )

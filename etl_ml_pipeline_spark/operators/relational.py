@@ -11,7 +11,7 @@ the optimizer sees declared intent, not an opaque Python function.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_ml_pipeline_spark.operators.base import BaseTransform
@@ -553,6 +553,25 @@ def grouped_running_sum(
     )
 
 
+# Most distinct group_col values a mixture transform accepts: its
+# one-row-per-group frame is summed in one unpartitioned window (one
+# task), fine for a mixture dimension (source, lang; the catalog passes
+# 20 sources), a stall for a data-scaled key such as doc_id.
+MIXTURE_MAX_GROUPS = 10_000
+
+
+def _mixture_total(gcol: str, w_all) -> Column:
+    """``sum(__w)`` over the per-group frame, failing the query in the
+    same window when the frame holds more than MIXTURE_MAX_GROUPS rows."""
+    return F.when(
+        F.count(F.lit(1)).over(w_all) > MIXTURE_MAX_GROUPS,
+        F.raise_error(F.lit(
+            f"group_col {gcol!r} has more than {MIXTURE_MAX_GROUPS} distinct "
+            "values; a mixture needs a bounded dimension such as source or lang"
+        )),
+    ).otherwise(F.sum("__w").over(w_all))
+
+
 @register_transform("token_budget_mixture")
 class TokenBudgetMixture(BaseTransform):
     """Materialize a training mixture specified in TOKENS: split
@@ -605,15 +624,10 @@ class TokenBudgetMixture(BaseTransform):
         # subtrees, so exchange reuse never fires). Same integer
         # arithmetic — identical allocation (mirrors
         # sample_exact_allocation).
-        # r16 bound audit (VERDICT r15 #1 sweep): the windowed frame is
-        # |distinct group_col| rows. CONTRACT: group_col must be a
-        # bounded mixture dimension (source/lang — catalog queries pass
-        # source, 20 values); a data-scaled key (doc_id, user) would
-        # single-partition a growing frame and needs the q11/q15
-        # pinned-aggregate form instead. The w_rem rank window below
-        # already requires the same bound, so the contract is not new.
+        # The windowed frame is |distinct group_col| rows, bounded by
+        # _mixture_total (the w_rem rank window below needs it too).
         w_all = W.partitionBy()
-        quota = weights.withColumn("__wt", F.sum("__w").over(w_all)).select(
+        quota = weights.withColumn("__wt", _mixture_total(gcol, w_all)).select(
             gcol,
             F.expr(f"{budget} * __w DIV __wt").alias("__base"),
             F.expr(f"({budget} * __w) % __wt").alias("__rem"),
@@ -736,11 +750,8 @@ class MixtureReweight(BaseTransform):
         # pass, then linear per-round arithmetic over |groups| rows.
         # Same integer ppm arithmetic — identical results (mirrors
         # mixture_doremi_weights).
-        # r16 bound audit (VERDICT r15 #1 sweep): the windowed frame is
-        # |distinct group_col| rows — the mixture-domain dimension
-        # (source/lang; catalog queries pass source, 20 values). Same
-        # bounded-dimension CONTRACT as TokenBudgetMixture above; a
-        # data-scaled key needs the q11/q15 pinned-aggregate form.
+        # The windowed frame is |distinct group_col| rows; the final
+        # total checks the same bound as TokenBudgetMixture above.
         from pyspark.sql import Window as W
 
         w_all = W.partitionBy()
@@ -758,7 +769,7 @@ class MixtureReweight(BaseTransform):
                 .withColumn("__w", F.expr("__w * (1000000 + __boost) div 1000000"))
                 .drop("__tot", "__share", "__boost")
             )
-        weights = per.withColumn("__tot", F.sum("__w").over(w_all)).select(
+        weights = per.withColumn("__tot", _mixture_total(gcol, w_all)).select(
             gcol,
             "n_docs",
             "mean_q_ppm",

@@ -6,6 +6,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_ml_pipeline_spark.session import tune
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -42,64 +44,10 @@ _HEAVY_MIN_BYTES_PER_CORE = 16 * 1024
 
 # Per-session scan cache, keyed by the live session object itself
 # (WeakKeyDictionary): a garbage-collected session drops its entry, so a
-# recycled id() can never serve another session's cached plans. Tuning
-# state lives on the session itself as a marker conf (see _tune_session)
-# for the same reason.
+# recycled id() can never serve another session's cached plans.
 _SCAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str, bool], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
-
-_TUNED_MARKER = "spark.etl_ml_pipeline_spark.catalog.tuned"
-
-
-def _tune_session(spark: SparkSession) -> None:
-    """One-time runtime-conf tuning applied to whatever session runs the
-    catalog — including external harness sessions we didn't build
-    (the correctness driver constructs its own SparkSession).
-
-    All of these are runtime-settable SQL confs, applied ONCE per
-    session (the round-1 review rightly flagged per-call conf mutation).
-
-    The PySpark DataFrame-debugging toggle is the big one: when enabled
-    (the default) every DataFrame method call inspects the Python stack
-    to record error call-sites — measured 0.3-1.5s of driver time per
-    built plan, which across an 83-query catalog is most of a
-    correctness-run budget. PySpark caches the flag in a module global
-    on first use (pyspark/errors/utils.py: _enable_debugging_cache), so
-    a session whose conf wasn't set before its first DataFrame op is
-    stuck with it; we set both the conf and the cache.
-    """
-    if spark.conf.get(_TUNED_MARKER, None) == "true":
-        return
-    spark.conf.set(_TUNED_MARKER, "true")
-    try:
-        import pyspark.errors.utils as _peu
-
-        spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
-        _peu._enable_debugging_cache = False
-    except Exception:  # noqa: BLE001 — internals moved; conf alone still helps
-        pass
-    # Harmless belt-and-braces: if an events parquet stores TIMESTAMP(NANOS)
-    # (which Spark's reader rejects outright), read nanos as int64 instead;
-    # t() then dispatches on the *actual* scanned type and only applies the
-    # nanos->micros projection when it sees a LongType ts column.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Pin the session to UTC so the NTZ->timestamp re-tag in
-    # _normalize_events_ts is a pure relabeling (wall-clock preserved)
-    # and event-time windows align identically on any host/cluster tz.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # Untuned sessions carry Spark's default 200 shuffle partitions —
-    # 200 tasks per exchange is pure scheduling overhead on local[N].
-    # Only replace the stock default; an explicitly tuned value (ours is
-    # 2×cores, a cluster operator's could be anything) is left alone.
-    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(2 * spark.sparkContext.defaultParallelism),
-        )
 
 
 def _estimated_scan_partitions(spark: SparkSession, input_bytes: int) -> int:
@@ -158,8 +106,8 @@ def t(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False) -> DataF
     * ``TimestampType`` — already an instant: pass through untouched.
     * ``TimestampNTZType`` (parquet ``timestamp[us/ms]`` with
       isAdjustedToUTC=false) — re-tag as a UTC-session timestamp,
-      preserving wall-clock values (session tz is pinned to UTC in
-      _tune_session).
+      preserving wall-clock values (session tz is pinned to UTC by
+      session.tune).
     * ``LongType`` — legacy TIMESTAMP(NANOS) storage surfaced as int64 by
       the ``nanosAsLong`` conf: truncate to microseconds with *integer*
       division (matches DuckDB's ns->us cast; double division would lose
@@ -173,7 +121,7 @@ def t(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False) -> DataF
     """
     import os
 
-    _tune_session(spark)
+    tune(spark)
     session_cache = _SCAN_CACHE.setdefault(spark, {})
     key = (sf_dir, name, heavy)
     cached = session_cache.get(key)
@@ -206,7 +154,7 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
         return df
     if isinstance(ts_type, T.TimestampNTZType):
         # Re-tag NTZ as a session-tz timestamp. With the session pinned to
-        # UTC (see _tune_session) this preserves wall-clock values exactly
+        # UTC (see session.tune) this preserves wall-clock values exactly
         # while giving downstream operators the instant-typed column they
         # expect (NTZ rejects casts to double, unix_* helpers, etc.).
         return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))

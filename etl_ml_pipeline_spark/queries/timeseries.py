@@ -499,8 +499,7 @@ def _write_batches_spark(
 # session's own parallelism in charge — the derivation only shrinks
 # tiny bounded replays, where it is pure fixed-cost removal (measured:
 # stream_late_outer_join_replay at sf0.1, 32 -> 4 partitions, identical
-# rows, 14.2s -> 5.0s interleaved in one session). Cluster operators
-# can pin an explicit count with SPARK_GRAFT_STREAM_SHUFFLE.
+# rows, 14.2s -> 5.0s interleaved in one session).
 _STREAM_STATE_TARGET_BYTES = 32 * 1024 * 1024
 
 # applyInPandasWithState replays use a much smaller per-partition byte
@@ -523,11 +522,6 @@ def _stream_state_partitions(
     input_bytes: int,
     target_bytes: int = _STREAM_STATE_TARGET_BYTES,
 ) -> int:
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "")
-    if env.isdigit() and int(env) > 0:
-        return int(env)
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     derived = (input_bytes + target_bytes - 1) // target_bytes
     return max(1, min(cur, derived))

@@ -45,6 +45,11 @@ class BaseSource:
         """
         self._cursor_predicate = (cursor_field, cursor)
 
+    def _post(self, df: DataFrame) -> DataFrame:
+        """``df`` filtered to rows past the cursor ``apply_cursor`` set."""
+        field, cursor = getattr(self, "_cursor_predicate", (None, None))
+        return df if cursor is None else df.filter(F.col(field) > F.lit(cursor))
+
     def cursor_max(self, df: DataFrame, cursor_field: str, cursor: Any) -> Any:
         """The new cursor: ``max(cursor_field)`` over the extracted rows,
         which the cursor already filtered (None when there are none).

@@ -23,7 +23,6 @@ from urllib.request import url2pathname
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StructType
 
 from etl_ml_pipeline_spark.registry import register_source
@@ -83,14 +82,6 @@ class _FileSource(BaseSource):
         if options:
             reader = reader.options(**{k: str(v) for k, v in options.items()})
         return reader
-
-    def _post(self, df: DataFrame) -> DataFrame:
-        pred = getattr(self, "_cursor_predicate", None)
-        if pred is not None:
-            field, cursor = pred
-            if cursor is not None:
-                df = df.filter(F.col(field) > F.lit(cursor))
-        return df
 
     def extract(self) -> DataFrame:
         path = self.config["path"]
@@ -232,8 +223,4 @@ class TableSource(BaseSource):
     """Read a registered catalog/temp-view table by name."""
 
     def extract(self) -> DataFrame:
-        df = self.spark.table(self.config["name"])
-        pred = getattr(self, "_cursor_predicate", None)
-        if pred is not None and pred[1] is not None:
-            df = df.filter(F.col(pred[0]) > F.lit(pred[1]))
-        return df
+        return self._post(self.spark.table(self.config["name"]))

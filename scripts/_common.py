@@ -2,14 +2,14 @@
 stamp on each JSON it writes, and running itself against an older tree
 (a throwaway checkout, re-run in a fresh process).
 
-The session always runs on every core this process may use, so a number
-recorded by a tool always says how many cores it was taken on.
+The session is the engine's own (``session.get_spark``), and `nproc` is
+its core count, so a number recorded by a tool always says how many
+cores it was taken on.
 """
 
 from __future__ import annotations
 
 import contextlib
-import os
 import shutil
 import subprocess
 import sys
@@ -18,16 +18,15 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
-NPROC = len(os.sched_getaffinity(0))
+
+from etl_ml_pipeline_spark.session import cores, get_spark  # noqa: E402
+
+NPROC = cores()
 
 
 def session(app_name: str):
-    """local[nproc] with 2 * nproc shuffle partitions and the engine's confs."""
-    from etl_ml_pipeline_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=app_name, master=f"local[{NPROC}]", shuffle_partitions=2 * NPROC
-    )
+    """The engine's session, with Spark's log quietened to errors."""
+    spark = get_spark(app_name=app_name)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -58,8 +57,8 @@ def run_in(tree: Path, script: str, argv: list[str], **kw) -> subprocess.Complet
     """Re-run ``script argv`` in a fresh process against ``tree``.
 
     The cwd is the tree, since Spark's Python workers import the package
-    from their cwd; ``--tree`` makes the child's ``use_tree()`` import it
-    ahead of the working tree.
+    from their cwd first (older trees ship no worker path); ``--tree``
+    makes the child's ``use_tree()`` import it ahead of the working tree.
     """
     return subprocess.run(
         [sys.executable, str(Path(script).resolve()), *argv, "--tree", str(tree)],
@@ -68,6 +67,9 @@ def run_in(tree: Path, script: str, argv: list[str], **kw) -> subprocess.Complet
 
 
 def use_tree(tree: str | None) -> None:
-    """In a child started by ``run_in()``: import the package from ``tree``."""
+    """In a child started by ``run_in()``: import the package from ``tree``,
+    keeping the working tree's ``get_spark`` so both sides share a policy."""
     if tree:
         sys.path.insert(0, tree)
+        for name in [m for m in sys.modules if m.split(".")[0] == "etl_ml_pipeline_spark"]:
+            del sys.modules[name]

@@ -3,8 +3,8 @@ bench.py's tail lines, per-query medians and the summary, so records at
 two core counts separate parallel queries from driver-bound ones.
 
 Usage: [SPARK_GRAFT_CPUS=N] python scripts/bench_sf1.py [OUT.json]
-       (default BENCH_sf1.json; cores default to nproc; builds .sf1 with
-       make_sf1.py when it is missing)
+       (default BENCH_sf1.json; cores as the engine's session sizes them;
+       builds .sf1 with make_sf1.py when it is missing)
 """
 
 from __future__ import annotations
@@ -25,10 +25,8 @@ def main() -> None:
     if not SF1.exists():
         subprocess.run([sys.executable, str(REPO / "scripts" / "make_sf1.py")],
                        check=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(NPROC))
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(SF1), SPARK_GRAFT_CPUS=cpus)
-    # cwd=REPO: Spark's Python workers import the engine from their cwd
-    proc = subprocess.run([sys.executable, str(REPO / "bench.py")], cwd=REPO,
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=str(SF1))
+    proc = subprocess.run([sys.executable, str(REPO / "bench.py")],
                           env=env, capture_output=True, text=True)
     parsed = {}
     for ln in proc.stdout.strip().splitlines()[-2:]:
@@ -41,13 +39,12 @@ def main() -> None:
     record = stamp({
         "n": 4,  # bench.py: 1 untimed warm pass + 3 timed (median reported)
         "rc": proc.returncode,
-        "cpus": int(cpus),
         "sf": 1.0,
         "per_query": parsed.get("headline_per_query", {}).get("queries", {}),
         "summary": parsed.get("headline_summary"),
     })
     out_path.write_text(json.dumps(record, indent=1))
-    print(json.dumps({"rc": proc.returncode, "cpus": cpus,
+    print(json.dumps({"rc": proc.returncode, "nproc": NPROC,
                       "value": (record["summary"] or {}).get("value")}))
 
 

@@ -16,9 +16,11 @@ JVM, no JDBC) so it runs in a couple of seconds:
    ``queries.MAX_STALE`` rounds stale (rounds from ``queries.last_recorded``,
    which reads the CORRECTNESS_r*.json records);
 7. README.md's "N named queries" line matches the live catalog;
-8. scripts/ keeps one tool per job: no round-stamped ``r<N>_*.py`` file,
-   and no script builds its own Spark session or pins a master or driver
-   memory (``_common.session()`` sizes it to the cores present).
+8. no round-stamped ``r<N>_*.py`` script, no script but ``_common.py``
+   calls ``get_spark``, and only ``etl_ml_pipeline_spark/session.py``
+   sets session policy: no other code (comments and docstrings aside) in
+   scripts/, bench.py or the package names ``SparkSession.builder``,
+   ``local[``, ``spark.driver.memory`` or the two sizing env variables.
 
 Escape hatch for genuinely unrelated emergency commits:
 ``PRECOMMIT_SKIP=1 python scripts/precommit_check.py``.
@@ -26,6 +28,7 @@ Escape hatch for genuinely unrelated emergency commits:
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
@@ -33,6 +36,15 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+
+
+def _code(src: str) -> str:
+    """``src`` without its comments and docstrings."""
+    tree = ast.parse(src)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant):
+            node.value = ast.Constant(None)
+    return ast.unparse(tree)
 
 
 def fail(msg: str) -> None:
@@ -169,26 +181,29 @@ def main() -> None:
                 f"has {len(qs)} — true up README.md in the same commit"
             )
 
-    # 8. one tool per job in scripts/: a new measurement is a flag on
-    # diff/ab/sweep/dump_plans, not a round-stamped copy, and every
-    # session comes from _common.session() so each number is taken on
-    # (and stamped with) the cores present.
-    for path in sorted((REPO / "scripts").glob("*.py")):
-        if re.match(r"r\d+_", path.name):
-            fail(f"scripts/{path.name} is round-stamped — fold it into a tool")
-        src = path.read_text()
-        pinned = re.search(
-            r"local\[|get_spark\(|SparkSession\.builder|spark\.driver\.memory", src
-        )
-        if path.name != "_common.py" and pinned:
-            fail(
-                f"scripts/{path.name} sets up Spark itself ({pinned.group()!r}) "
-                "— take the session from _common.session()"
-            )
+    # 8. one tool per job in scripts/ (a new measurement is a flag on
+    # diff/ab/sweep/dump_plans, not a round-stamped copy), and one
+    # session policy: session.py alone sizes and configures a session.
+    scripts = sorted((REPO / "scripts").glob("*.py"))
+    package = sorted((REPO / "etl_ml_pipeline_spark").rglob("*.py"))
+    exempt = {REPO / "etl_ml_pipeline_spark" / "session.py", Path(__file__).resolve()}
+    for path in [*scripts, REPO / "bench.py", *package]:
+        rel = path.relative_to(REPO)
+        if path in scripts and re.match(r"r\d+_", path.name):
+            fail(f"{rel} is round-stamped — fold it into a tool")
+        if path in exempt:
+            continue
+        src = _code(path.read_text())
+        if path in scripts and path.name != "_common.py" and "get_spark(" in src:
+            fail(f"{rel} sets up Spark itself — take the session from _common.session()")
+        pinned = re.search(r"SparkSession\.builder|local\[|spark\.driver\.memory"
+                           r"|SPARK_GRAFT_CPUS|SPARK_DRIVER_MEMORY", src)
+        if pinned:
+            fail(f"{rel} decides session policy ({pinned.group()!r}) — only session.py may")
 
     print(
         f"precommit_check: OK — catalog {len(qs)} queries, pin + "
-        "CATALOG.md + oracles + staleness + README + scripts consistent"
+        "CATALOG.md + oracles + staleness + README + scripts + session policy consistent"
     )
 
 

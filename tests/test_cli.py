@@ -332,7 +332,7 @@ def test_bench_tail_fits_2000_chars():
 
     timings = {n: 999.999 for n in bench_mod.HEADLINE}
     perq = json.dumps(
-        {"metric": "headline_per_query", "queries": timings, "sf": 0.1},
+        {"metric": "headline_per_query", "queries": timings, "sf": 0.1, "cores": 999},
         separators=(",", ":"),
     )
     summary = json.dumps(
@@ -347,6 +347,7 @@ def test_bench_tail_fits_2000_chars():
             "cpu_probe_sec": 9.999,
             "value_22q_per_probe": 99999.999,
             "sf": 0.1,
+            "cores": 999,
         },
         separators=(",", ":"),
     )

@@ -1261,6 +1261,35 @@ def test_token_budget_mixture_transform_invariants(spark):
     assert by_src == {"__null__": 2, "a": 2}
 
 
+def test_mixture_transforms_reject_unbounded_group_col(spark):
+    """group_col must be a bounded mixture dimension: a data-scaled key
+    such as doc_id fails the query with a message naming the column and
+    the limit, inside the plan both transforms already build."""
+    from pyspark.sql import functions as F
+
+    from etl_ml_pipeline_spark.operators.relational import (
+        MIXTURE_MAX_GROUPS,
+        MixtureReweight,
+        TokenBudgetMixture,
+    )
+
+    df = spark.range(MIXTURE_MAX_GROUPS + 1).select(
+        F.col("id").alias("doc_id"), F.lit("a b c").alias("text")
+    )
+    msg = f"group_col 'doc_id' has more than {MIXTURE_MAX_GROUPS} distinct"
+    for tr in (
+        TokenBudgetMixture({"budget_tokens": 100, "group_col": "doc_id"}),
+        MixtureReweight({"group_col": "doc_id", "mode": "weights"}),
+    ):
+        with pytest.raises(Exception, match=msg):
+            tr.transform(df).collect()
+    # at the limit the same plans run
+    ok = df.limit(MIXTURE_MAX_GROUPS)
+    assert TokenBudgetMixture(
+        {"budget_tokens": 100, "group_col": "doc_id"}
+    ).transform(ok).count() > 0
+
+
 def test_perplexity_bucket_transform_tertiles_and_gate(spark):
     """Docs made of corpus-common tokens score lowest surprisal (head),
     half-common docs land middle, all-unique-token docs land tail; the

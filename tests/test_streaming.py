@@ -656,15 +656,14 @@ def test_transform_with_state_port(spark, tmp_path):
     assert final == {1: (3, 175), 2: (1, 10), 3: (1, 7)}
 
 
-def test_replay_invariant_to_state_partitions(spark, tmp_path):
+def test_replay_invariant_to_state_partitions(spark, tmp_path, monkeypatch):
     """The replay harness sizes streaming state partitions from the
     bounded input (r15 optimization: state partitioning is fixed at
     query start, so tiny replays must not pay 32 partitions of
     per-trigger state-store overhead). Partition count must never
     change results: run the same stateful replay at the derived count
     and at an explicitly pinned count and compare rows."""
-    import os
-
+    from etl_ml_pipeline_spark.queries import timeseries
     from etl_ml_pipeline_spark.queries.timeseries import (
         _stream_state_partitions,
         stream_tumble_replay,
@@ -672,15 +671,8 @@ def test_replay_invariant_to_state_partitions(spark, tmp_path):
 
     sf_dir = "/root/testdata/sf0.001"
     base = stream_tumble_replay(spark, sf_dir).toPandas()
-    prev = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = "7"
-    try:
-        pinned = stream_tumble_replay(spark, sf_dir).toPandas()
-    finally:
-        if prev is None:
-            del os.environ["SPARK_GRAFT_STREAM_SHUFFLE"]
-        else:
-            os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = prev
+    monkeypatch.setattr(timeseries, "_stream_state_partitions", lambda *a: 7)
+    pinned = stream_tumble_replay(spark, sf_dir).toPandas()
     assert base.equals(pinned)
     # sizing formula: derived from bytes, clamped to [1, session parts]
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))

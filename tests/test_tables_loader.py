@@ -16,6 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from etl_ml_pipeline_spark import session as session_mod
 from etl_ml_pipeline_spark.queries import tables as tables_mod
 from etl_ml_pipeline_spark.queries.tables import t
 
@@ -93,11 +94,11 @@ def test_scan_cache_keyed_by_session_object(spark, tmp_path, fresh_cache):
 def test_tuning_marker_is_session_scoped(spark):
     """Tuning state lives on the session as a conf, so a recycled object
     address can never skip tuning: clearing the marker re-tunes."""
-    tables_mod._tune_session(spark)
-    assert spark.conf.get(tables_mod._TUNED_MARKER) == "true"
+    session_mod.tune(spark)
+    assert spark.conf.get(session_mod._TUNED_MARKER) == "true"
     # Simulate a fresh session at the same address: unset the marker.
-    spark.conf.unset(tables_mod._TUNED_MARKER)
+    spark.conf.unset(session_mod._TUNED_MARKER)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    tables_mod._tune_session(spark)
-    assert spark.conf.get(tables_mod._TUNED_MARKER) == "true"
+    session_mod.tune(spark)
+    assert spark.conf.get(session_mod._TUNED_MARKER) == "true"
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
