@@ -356,103 +356,16 @@ def global_row_number(
     order_cols: list[str],
     out_col: str = "rn",
     num_partitions: int | None = None,
-    pin_input: bool = False,
 ) -> DataFrame:
-    """Exact global row numbers WITHOUT the single-partition sort a bare
-    ``row_number() OVER (ORDER BY ...)`` forces (WindowExec moves ALL
-    rows to one task — the classic global-ordering scale-killer).
-
-    Two-phase distributed ranking:
-    1. ``repartitionByRange`` on the ordering key — partitions become
-       non-overlapping, ordered ranges (ties colocate);
-    2. local row_number within each partition (parallel windows keyed by
-       partition id);
-    3. partition row-counts (one tiny aggregate) -> cumulative offsets,
-       broadcast back; global rn = local rn + offset of all earlier
-       ranges.
-
-    The only unpartitioned window runs over ~#partitions rows of counts.
-    Output is identical to the naive global window for any ordering key
-    (ties within an identical full ordering tuple are arbitrary in both
-    formulations, as always with row_number).
-    """
-    from pyspark.sql import Window as W
-
-    spark = df.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_cols]
-    ranged = _ranged_with_pid(df, parts, order_cols, pin_input=pin_input)
-    w_local = W.partitionBy("__pid").orderBy(*cols)
-    local = ranged.withColumn("__lrn", F.row_number().over(w_local))
-    counts = local.groupBy("__pid").agg(F.count("*").alias("__cnt"))
-    w_off = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__pid", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, (F.col("__lrn") + F.col("__off")).cast("int"))
-        .drop("__pid", "__lrn", "__off")
-    )
-
-
-def global_running_sum(
-    df: DataFrame,
-    value_col: str,
-    order_cols: list[str],
-    out_col: str = "running_sum",
-    num_partitions: int | None = None,
-    pin_input: bool = False,
-    bounds_df: DataFrame | None = None,
-) -> DataFrame:
-    """Exact global running (prefix) sum in total ``order_cols`` order,
-    without the single-task sort — the cumulative twin of
-    ``global_row_number`` and the primitive behind sequence packing,
-    quota assignment, and cumulative-share analyses.
-
-    Same two-phase shape: range repartition -> parallel local cumsum
-    windows -> per-partition totals become broadcast offsets. Exact for
-    integer/decimal values; for doubles the result equals the naive
-    window's value only up to float re-association (sums are grouped by
-    partition) — use longs for money/token counts, as the callers here do.
-
-    ``order_cols`` should be a TOTAL order (append a unique tiebreak
-    column if the key can repeat): with duplicate full ordering tuples
-    the per-row prefix sums are tie-order-dependent in ANY engine —
-    the naive window and this operator may legitimately attach
-    different cumulative values to the tied rows (found by the
-    round-11 randomized hunt; every caller here orders by a unique
-    id). Pinned by tests/test_plans.py's prefix-sum property test.
-    """
-    from pyspark.sql import Window as W
-
-    spark = df.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_cols]
-    ranged = _ranged_with_pid(
-        df, parts, order_cols, pin_input=pin_input, bounds_df=bounds_df
-    )
-    w_local = (
-        W.partitionBy("__pid")
-        .orderBy(*cols)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = ranged.withColumn("__lsum", F.sum(value_col).over(w_local))
-    totals = ranged.groupBy("__pid").agg(F.sum(value_col).alias("__tot"))
-    w_off = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid", F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, F.col("__lsum") + F.col("__off"))
-        .drop("__pid", "__lsum", "__off")
-    )
+    """``row_number() OVER (ORDER BY order_cols)`` as an int column: a
+    :func:`grouped_running_sum` of ones over no groups."""
+    rn = grouped_running_sum(df, F.lit(1), [], order_cols, out_col, num_partitions)
+    return rn.withColumn(out_col, F.col(out_col).cast("int"))
 
 
 def grouped_running_sum(
     df: DataFrame,
-    value_col: str,
+    value_col: str | Column,
     group_cols: list[str],
     order_cols: list[str],
     out_col: str = "running_sum",
@@ -460,19 +373,36 @@ def grouped_running_sum(
     broadcast_offsets: bool = True,
     pin_input: bool = False,
     total_col: str | None = None,
+    bounds_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact PER-GROUP running (prefix) sum in ``order_cols`` order
-    within each group — without ``Window.partitionBy(group)``'s
-    one-task-per-group sort, which serializes on the largest group
-    (a mega-source at 100 TB becomes a single straggler task).
+    """Exact running (prefix) sum of ``value_col`` (a column name or a
+    Column) in ``order_cols`` order within each ``group_cols`` group,
+    without the single-task sort of ``Window.orderBy`` (``group_cols=[]``
+    is the global prefix sum) or the one-task-per-group sort of
+    ``Window.partitionBy(group)``, which serializes on the largest group
+    (a mega-source at 100 TB becomes a single straggler task). The one
+    implementation of the two-phase prefix behind sequence packing,
+    token budgets, epoch shuffles, global ranks and exact percentiles; a
+    row number is the sum of ``F.lit(1)`` (:func:`global_row_number`).
 
-    Same two-phase shape as :func:`global_running_sum`, extended with
-    the group key: range repartition on (group, order) keeps each
-    partition's rows contiguous in group-major order, local cumsum
-    windows run per (partition, group), and the carry-in offset for a
-    (partition, group) cell is the sum of the SAME group's totals in
-    earlier partitions — a groups x partitions frame, broadcast. A
+    Two phases: range repartition on the order key (``__pid``, see
+    :func:`_ranged_with_pid`, which also takes ``pin_input`` and
+    ``bounds_df``) keeps each group's rows in ``__pid`` order; local
+    cumsum windows run per (partition, group), and the carry-in offset
+    for a (partition, group) cell is the sum of the SAME group's totals
+    in earlier partitions — a groups x partitions frame, broadcast. A
     group spanning many partitions parallelizes across all of them.
+
+    Exact for integer/decimal values; for doubles the result equals the
+    naive window's only up to float re-association (sums are grouped by
+    partition) — use longs for money/token counts, as the callers here
+    do. ``order_cols`` should be a TOTAL order within a group (append a
+    unique tiebreak column if the key can repeat): with duplicate full
+    ordering tuples the per-row prefix sums are tie-order-dependent in
+    ANY engine (found by the round-11 randomized hunt; pinned by
+    tests/test_plans.py's prefix-sum property test). A ROWS frame still
+    gives tied rows distinct, consecutive sums of ones, as
+    ``row_number()`` does.
 
     Bound (ADVICE r08 #3): the offsets frame is |groups| x |partitions|
     rows, so the explicit broadcast is only safe while group
@@ -498,6 +428,8 @@ def grouped_running_sum(
     """
     from pyspark.sql import Window as W
 
+    from etl_ml_pipeline_spark.operators.joins import null_safe_join
+
     spark = df.sparkSession
     parts = num_partitions or spark.sparkContext.defaultParallelism
     ocols = [F.col(c) for c in order_cols]
@@ -513,6 +445,7 @@ def grouped_running_sum(
         order_cols,
         fallback_cols=[*group_cols, *order_cols],
         pin_input=pin_input,
+        bounds_df=bounds_df,
     )
     w_local = (
         W.partitionBy("__pid", *group_cols)
@@ -541,8 +474,6 @@ def grouped_running_sum(
     # key is a legitimate group — Window.partitionBy and groupBy both
     # treat it as one — so the join back must be eqNullSafe per key or
     # every NULL-keyed row silently drops here.
-    from etl_ml_pipeline_spark.operators.joins import null_safe_join
-
     joined = null_safe_join(
         local,
         F.broadcast(offsets) if broadcast_offsets else offsets,

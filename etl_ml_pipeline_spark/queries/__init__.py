@@ -6,8 +6,8 @@ tables). The driver (and our own tests) run both sides and compare
 row-count + schema + order-insensitive value hash, so:
 
 - every computed column is aliased identically on both sides;
-- doubles are rounded with the shared helpers in ``parity.py`` so both
-  engines produce bit-identical values;
+- doubles are rounded in each query, ``F.round`` on the Spark side and
+  ``round`` in its oracle SQL, so both engines produce bit-identical values;
 - queries whose semantics SQL cannot express (recursive EWMAs, LSH
   bucketing with library hashes) appear in QUERIES only -> rows-only check.
 """

@@ -30,7 +30,12 @@ from etl_ml_pipeline_spark.operators.dedup import (
     shingle_df,
     simhash16,
 )
-from etl_ml_pipeline_spark.queries.tables import t
+from etl_ml_pipeline_spark.queries.tables import (
+    _HEAVY_MIN_BYTES_PER_CORE,
+    _rebalance,
+    _scan_bytes,
+    t,
+)
 
 
 # Id offset of the injected copies. Far above any base doc_id, so copies
@@ -51,11 +56,9 @@ def _dup_corpus(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFr
     row emits its 1-3 copies through an explode of a compacted struct
     array — same rows, one scan, one stage. ``heavy=True`` fans the
     corpus out across all cores *after* the union for the compute-bound
-    consumers (MinHash/SimHash hashing); guarded by the same bytes/core
-    floor the scan rebalance uses so tiny inputs stay unshuffled.
+    consumers (MinHash/SimHash hashing), by the scan rebalance rule
+    itself: tiny inputs and already-wide scans stay unshuffled.
     """
-    import os
-
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     copy = F.struct(F.col("doc_id").alias("doc_id"), F.col("text").alias("text"))
     exact = F.when(
@@ -75,15 +78,8 @@ def _dup_corpus(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFr
         F.explode(F.array_compact(F.array(copy, exact, near))).alias("c")
     ).select("c.doc_id", "c.text")
     if heavy:
-        from etl_ml_pipeline_spark.queries.tables import _HEAVY_MIN_BYTES_PER_CORE
-
-        target = spark.sparkContext.defaultParallelism
-        try:
-            input_bytes = os.path.getsize(f"{sf_dir}/documents.parquet")
-        except OSError:
-            input_bytes = 1 << 40
-        if input_bytes >= target * _HEAVY_MIN_BYTES_PER_CORE:
-            corpus = corpus.repartition(target)
+        input_bytes = _scan_bytes(sf_dir, "documents")
+        corpus = _rebalance(spark, corpus, input_bytes, _HEAVY_MIN_BYTES_PER_CORE)
     return corpus
 
 

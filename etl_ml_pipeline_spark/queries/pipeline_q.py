@@ -8,7 +8,7 @@ composition is where silent bugs live (a stage that reorders rows,
 drops a column, or re-derives a stat differently than its neighbor
 consumed it). This query chains the real operators
 (`operators/text.py`, `operators/dedup.exact_dedup`,
-`operators/relational.global_running_sum`) into one lazy Catalyst plan
+`operators/relational.grouped_running_sum`) into one lazy Catalyst plan
 and oracle-checks the FINAL packed output, so a green hash certifies
 the whole chain end to end — the integration twin of the per-stage
 entries.
@@ -40,7 +40,7 @@ _PACK_BUDGET = 512
 
 def training_data_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_ml_pipeline_spark.operators.dedup import exact_dedup
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
 
     docs = t(spark, sf_dir, "documents")
     c = F.col("text")
@@ -77,8 +77,8 @@ def training_data_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the arithmetic-bucket + raw-bounds shape because its lineage is
     # already narrow behind the anti-join checkpoint. Rows unchanged
     # (oracle-green).
-    cum = global_running_sum(
-        sampled, "n_tok", ["doc_id"], "cum_tok", pin_input=True
+    cum = grouped_running_sum(
+        sampled, "n_tok", [], ["doc_id"], "cum_tok", pin_input=True
     )
     packed = cum.withColumn(
         "pack_id",
@@ -180,7 +180,7 @@ ORDER BY pack_id
 
 def training_data_prep_decontam_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_ml_pipeline_spark.operators.dedup import exact_dedup
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
     from etl_ml_pipeline_spark.operators.text import contamination_pairs
 
     docs = t(spark, sf_dir, "documents")
@@ -243,8 +243,8 @@ def training_data_prep_decontam_e2e(spark: SparkSession, sf_dir: str) -> DataFra
         F.min(F.col("doc_id").cast("double")).alias("__lo"),
         F.max(F.col("doc_id").cast("double")).alias("__hi"),
     )
-    cum = global_running_sum(
-        sampled, "n_tok", ["doc_id"], "cum_tok", bounds_df=bounds
+    cum = grouped_running_sum(
+        sampled, "n_tok", [], ["doc_id"], "cum_tok", bounds_df=bounds
     )
     packed = cum.withColumn(
         "pack_id",

@@ -367,9 +367,9 @@ ORDER BY o_orderstatus
 # bin-packing Delta's OPTIMIZE performs. The plan output (files,
 # bytes, id span per bin) is what a table service would hand to the
 # rewrite jobs.
-# Scale: rides global_running_sum's two-phase prefix sum (range
-# repartition by arithmetic buckets + local cumsum windows + broadcast
-# offsets) with covering bounds from the raw scan — planning over
+# Scale: rides grouped_running_sum's two-phase prefix sum over no groups
+# (range repartition by arithmetic buckets + local cumsum windows +
+# broadcast offsets) with covering bounds from the raw scan — planning over
 # millions of file-manifest rows is a metadata-scale Spark job, never
 # a single-task sort. Exact: sizes are longs.
 # ---------------------------------------------------------------------------
@@ -378,7 +378,7 @@ _COMPACT_TARGET = 25_000  # target output size (chars stand in for bytes)
 
 
 def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
 
     files = t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("file_id"), F.col("n_chars").alias("bytes")
@@ -387,8 +387,8 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.col("file_id").cast("double")).alias("__lo"),
         F.max(F.col("file_id").cast("double")).alias("__hi"),
     )
-    cum = global_running_sum(
-        files, "bytes", ["file_id"], "cum_bytes", bounds_df=bounds
+    cum = grouped_running_sum(
+        files, "bytes", [], ["file_id"], "cum_bytes", bounds_df=bounds
     )
     binned = cum.withColumn(
         "bin",

@@ -179,7 +179,7 @@ ORDER BY p.lang
 # stay whole). For strict capacity semantics use
 # pack_documents_capacity below, which splits at pack boundaries.
 # Scale: the cumulative token offset uses the two-phase distributed
-# prefix sum (operators.relational.global_running_sum) — exact long
+# prefix sum (operators.relational.grouped_running_sum) — exact long
 # arithmetic, no single-task window.
 # ---------------------------------------------------------------------------
 
@@ -187,13 +187,13 @@ _PACK_BUDGET = 512
 
 
 def pack_documents_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
     from etl_ml_pipeline_spark.operators.text import token_count
 
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", token_count(F.col("text")).cast("long").alias("n_tok")
     )
-    cum = global_running_sum(docs, "n_tok", ["doc_id"], "cum_tok")
+    cum = grouped_running_sum(docs, "n_tok", [], ["doc_id"], "cum_tok")
     packed = cum.withColumn(
         "pack_id",
         F.floor((F.col("cum_tok") - F.col("n_tok")) / _PACK_BUDGET).cast("long"),
@@ -249,7 +249,7 @@ ORDER BY pack_id
 
 
 def pack_documents_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
     from etl_ml_pipeline_spark.operators.text import token_count
 
     B = _PACK_BUDGET
@@ -258,7 +258,7 @@ def pack_documents_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", token_count(F.col("text")).cast("long").alias("n_tok"))
         .filter(F.col("n_tok") > 0)
     )
-    cum = global_running_sum(docs, "n_tok", ["doc_id"], "cum_tok")
+    cum = grouped_running_sum(docs, "n_tok", [], ["doc_id"], "cum_tok")
     spans = cum.select(
         "doc_id",
         "n_tok",
@@ -982,8 +982,8 @@ ORDER BY lang
 # Scale: one shuffle partitioned by source with a bounded per-partition
 # top-N; no global sort. Hot sources are the common case (web domains
 # are Zipfian) — rank-within-partition keeps the hot source on one
-# reducer but emits only cap rows from it; for extreme cardinality the
-# two-phase global_row_number pattern applies per source.
+# reducer but emits only cap rows from it; for extreme cardinality a
+# two-phase grouped_running_sum of ones numbers rows per source.
 # Ladder note (the repo's worst per-decade exponent, 0.91, adjudicated
 # round 11): the executed plan is already the optimal shape — a
 # Partial+Final WindowGroupLimit pair, so the map side emits only
@@ -1182,31 +1182,23 @@ ORDER BY split
 # 60-bit md5 hash of "ep{epoch}:{doc_id}" (identical across engines,
 # uncorrelated between epochs). Scale: the permutation is assigned with
 # the two-phase distributed rank (operators/relational.py
-# global_row_number — range-repartition on the hash, local row_number,
-# broadcast offsets), NEVER a single-task global window; each epoch is
-# one such pass, exactly how a 100 TB corpus gets its epoch order
-# materialized (epochs are processed sequentially in training anyway).
+# grouped_running_sum of ones per epoch — range-repartition on the hash,
+# local running counts, broadcast offsets), NEVER a single-task global
+# window, exactly how a 100 TB corpus gets its epoch order materialized.
 # ---------------------------------------------------------------------------
 
 _SHUFFLE_EPOCHS = 2
 
 
 def shuffle_epoch_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
 
-    from etl_ml_pipeline_spark.operators.relational import _ranged_with_pid
-
-    # r15: all epochs in ONE two-phase rank pass instead of one
-    # global_row_number per epoch. The epochs explode out of a single
-    # doc_id scan, the arithmetic __pid bucketing runs over the hash
-    # column alone (monotone in __h, so within every epoch rows in an
-    # earlier bucket rank before a later bucket), the local window
-    # partitions by (__pid, epoch), and the broadcast offsets become
-    # per-(epoch, earlier-pid) count sums — the grouped generalization
-    # of global_row_number's offset stage. One scan + one hash exchange
-    # carries ALL epochs' rows (same bytes as before, half the
-    # shuffles/jobs); positions are identical by construction (rank of
-    # (__h, doc_id) within each epoch, doc_id unique per epoch).
+    # All epochs in ONE two-phase rank pass: the epochs explode out of a
+    # single doc_id scan and the rank is a per-epoch running count in
+    # (__h, doc_id) order. The range bucketing runs over the hash column
+    # alone (monotone in __h), so one scan + one hash exchange carries
+    # every epoch's rows; doc_id is unique per epoch, so positions are
+    # the exact per-epoch row numbers.
     docs = t(spark, sf_dir, "documents").select("doc_id")
     eps = F.array(*[F.lit(e) for e in range(1, _SHUFFLE_EPOCHS + 1)])
     hashed = docs.select(
@@ -1222,30 +1214,12 @@ def shuffle_epoch_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    parts = spark.sparkContext.defaultParallelism
-    ranged = _ranged_with_pid(hashed, parts, ["__h"])
-    w_local = W.partitionBy("__pid", "epoch").orderBy("__h", "doc_id")
-    local = ranged.withColumn("__lrn", F.row_number().over(w_local))
-    counts = local.groupBy("__pid", "epoch").agg(F.count("*").alias("__cnt"))
-    w_off = (
-        W.partitionBy("epoch")
-        .orderBy("__pid")
-        .rowsBetween(W.unboundedPreceding, -1)
+    ranked = grouped_running_sum(
+        hashed, F.lit(1), ["epoch"], ["__h", "doc_id"], "position"
     )
-    offsets = counts.select(
-        "__pid",
-        "epoch",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-    )
-    return (
-        local.join(F.broadcast(offsets), ["__pid", "epoch"])
-        .select(
-            "epoch",
-            (F.col("__lrn") + F.col("__off")).cast("int").alias("position"),
-            "doc_id",
-        )
-        .orderBy("epoch", "position")
-    )
+    return ranked.select(
+        "epoch", F.col("position").cast("int").alias("position"), "doc_id"
+    ).orderBy("epoch", "position")
 
 
 _SHUFFLE_EPOCH_SQL = f"""
@@ -1642,7 +1616,7 @@ ORDER BY r.lang, rk
 # docs first — tie: doc_id) WITHOUT a single-partition global window,
 # via the same two-phase distributed rank as shuffle_epoch_documents
 # (operators/relational.global_row_number: range-repartition, local
-# row_number, broadcast cumulative offsets). The result emits five
+# running counts, broadcast cumulative offsets). The result emits five
 # exact checkpoints (first, quartiles by ceil(k*n/4), last) — each
 # pins the precise (position, doc_id, n_chars) triple, so any error
 # anywhere in the distributed rank surfaces as a hash mismatch against

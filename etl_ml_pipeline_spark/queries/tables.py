@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,12 +57,23 @@ def _estimated_scan_partitions(spark: SparkSession, input_bytes: int) -> int:
     plan->RDD conversion per scan (measured driver overhead on every
     catalog query). Spark splits files into ~maxPartitionBytes chunks;
     a byte-based estimate is exact enough for the "is this scan
-    ridiculously narrower than the cluster" decision.
+    ridiculously narrower than the cluster" decision. The conf reads back
+    exactly as it was set (``134217728b``, ``64m``), so it is parsed with
+    Spark's own byte-string rule.
     """
-    max_pb = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b").rstrip("b")
-    )
+    conf = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    jvm = spark.sparkContext._jvm
+    max_pb = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
     return max(1, (input_bytes + max_pb - 1) // max_pb)
+
+
+def _scan_bytes(sf_dir: str, name: str) -> int:
+    """Bytes the scan rebalance sizes a table's parquet file by; a path
+    that cannot be stat'ed (hdfs/s3) counts as big enough."""
+    try:
+        return os.path.getsize(f"{sf_dir}/{name}.parquet")
+    except OSError:
+        return 1 << 40
 
 
 def _rebalance(
@@ -119,8 +131,6 @@ def t(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False) -> DataF
     queries. The cache is a WeakKeyDictionary keyed by the session object,
     so entries die with their session.
     """
-    import os
-
     tune(spark)
     session_cache = _SCAN_CACHE.setdefault(spark, {})
     key = (sf_dir, name, heavy)
@@ -128,17 +138,12 @@ def t(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False) -> DataF
     if cached is not None:
         return cached
 
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        input_bytes = os.path.getsize(path)
-    except OSError:  # non-local path (hdfs/s3): assume big enough
-        input_bytes = 1 << 40
     min_bpc = _HEAVY_MIN_BYTES_PER_CORE if heavy else _REBALANCE_MIN_BYTES_PER_CORE
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = _normalize_events_ts(df)
     if name in COMPUTE_HEAVY:
-        df = _rebalance(spark, df, input_bytes, min_bpc)
+        df = _rebalance(spark, df, _scan_bytes(sf_dir, name), min_bpc)
     session_cache[key] = df
     return df
 

@@ -20,7 +20,10 @@ JVM, no JDBC) so it runs in a couple of seconds:
    calls ``get_spark``, and only ``etl_ml_pipeline_spark/session.py``
    sets session policy: no other code (comments and docstrings aside) in
    scripts/, bench.py or the package names ``SparkSession.builder``,
-   ``local[``, ``spark.driver.memory`` or the two sizing env variables.
+   ``local[``, ``spark.driver.memory`` or the two sizing env variables;
+9. one two-phase prefix primitive: no package module but
+   ``operators/relational.py`` names ``_ranged_with_pid`` in its code
+   (call ``grouped_running_sum`` instead of re-assembling it).
 
 Escape hatch for genuinely unrelated emergency commits:
 ``PRECOMMIT_SKIP=1 python scripts/precommit_check.py``.
@@ -201,9 +204,18 @@ def main() -> None:
         if pinned:
             fail(f"{rel} decides session policy ({pinned.group()!r}) — only session.py may")
 
+    # 9. one two-phase prefix primitive: grouped_running_sum owns the
+    # range-bucket -> local window -> broadcast-offset algorithm.
+    prefix_home = REPO / "etl_ml_pipeline_spark" / "operators" / "relational.py"
+    for path in package:
+        if path != prefix_home and "_ranged_with_pid" in _code(path.read_text()):
+            fail(f"{path.relative_to(REPO)} names _ranged_with_pid — call "
+                 "operators.relational.grouped_running_sum instead")
+
     print(
         f"precommit_check: OK — catalog {len(qs)} queries, pin + "
-        "CATALOG.md + oracles + staleness + README + scripts + session policy consistent"
+        "CATALOG.md + oracles + staleness + README + scripts + session policy + "
+        "prefix primitive consistent"
     )
 
 

@@ -307,12 +307,12 @@ def test_global_running_sum_matches_naive_window(spark, sf_dir):
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", (F.col("o_custkey") % 1000).cast("long").alias("v")
     )
-    fast = global_running_sum(orders, "v", ["o_orderkey"], "cs")
+    fast = grouped_running_sum(orders, "v", [], ["o_orderkey"], "cs")
     naive = orders.withColumn(
         "cs",
         F.sum("v").over(
@@ -340,7 +340,7 @@ def test_global_running_sum_passthrough_columns_stay_exact(spark, sf_dir):
     arbitrary extra columns riding along, stably across re-collects."""
     from pyspark.sql import functions as F
 
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
 
     docs = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey",
@@ -348,7 +348,9 @@ def test_global_running_sum_passthrough_columns_stay_exact(spark, sf_dir):
         "o_orderstatus",  # passthrough: pruned by totals, kept by output
         "o_orderpriority",
     )
-    out = global_running_sum(docs, "v", ["o_orderkey"], "cs", num_partitions=16)
+    out = grouped_running_sum(
+        docs, "v", [], ["o_orderkey"], "cs", num_partitions=16
+    )
     pdf = out.select("o_orderkey", "v", "cs").orderBy("o_orderkey").toPandas()
     assert (pdf.cs.values == pdf.v.cumsum().values).all()
     pdf2 = out.select("o_orderkey", "cs").orderBy("o_orderkey").toPandas()
@@ -362,14 +364,14 @@ def test_global_running_sum_string_key_fallback_is_pinned(spark, sf_dir):
     and still produce exact prefix sums."""
     from pyspark.sql import functions as F
 
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
 
     docs = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         F.col("o_orderkey").cast("string").alias("k"),
         (F.col("o_custkey") % 97).cast("long").alias("v"),
         "o_orderstatus",
     )
-    out = global_running_sum(docs, "v", ["k"], "cs", num_partitions=8)
+    out = grouped_running_sum(docs, "v", [], ["k"], "cs", num_partitions=8)
     assert "existingrdd" in out._jdf.queryExecution().executedPlan().toString().lower()
     pdf = out.select("k", "v", "cs").orderBy("k").toPandas()  # string order
     assert (pdf.cs.values == pdf.v.cumsum().values).all()
@@ -742,6 +744,32 @@ def test_grouped_running_sum_matches_naive_window(spark, sf_dir):
     assert c == a
 
 
+def test_grouped_running_count_is_grouped_row_number(spark):
+    """A per-group running sum of ones, cast to int, IS
+    ``row_number() OVER (PARTITION BY g ORDER BY k, id)``: a NULL group,
+    a string leading key (the sampled-range fallback) and repeated k
+    values, at 1, 3 and 8 partitions."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
+
+    rows = [
+        (["a", "b", None][i % 3], f"k{(i * 7) % 5}", i) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "g string, k string, id long")
+    naive = df.withColumn(
+        "rn", F.row_number().over(W.partitionBy("g").orderBy("k", "id"))
+    )
+    want = sorted((r.g or "", r.id, r.rn) for r in naive.collect())
+    for parts in (1, 3, 8):
+        fast = grouped_running_sum(
+            df, F.lit(1), ["g"], ["k", "id"], "rn", num_partitions=parts
+        ).withColumn("rn", F.col("rn").cast("int"))
+        got = sorted((r.g or "", r.id, r.rn) for r in fast.collect())
+        assert got == want, parts
+
+
 def test_global_running_sum_pathological_double_keys(spark):
     """NaN / +-Infinity leading keys must keep exact prefix sums AND
     balanced finite buckets: explicit clamp semantics (NaN and +Inf ->
@@ -757,7 +785,7 @@ def test_global_running_sum_pathological_double_keys(spark):
 
     from etl_ml_pipeline_spark.operators.relational import (
         _ranged_with_pid,
-        global_running_sum,
+        grouped_running_sum,
     )
 
     rows = [(float("-inf"), 1), (-5.0, 2), (0.0, 3), (7.5, 4),
@@ -765,7 +793,7 @@ def test_global_running_sum_pathological_double_keys(spark):
         (float(i), 10 + i) for i in range(20)
     ]
     df = spark.createDataFrame(rows, "k double, v long")
-    fast = global_running_sum(df, "v", ["k"], "cs", num_partitions=4)
+    fast = grouped_running_sum(df, "v", [], ["k"], "cs", num_partitions=4)
     naive = df.withColumn(
         "cs",
         F.sum("v").over(
@@ -799,7 +827,7 @@ def test_global_running_sum_bounds_df_is_consumed(spark, sf_dir):
 
     from etl_ml_pipeline_spark.operators.relational import (
         _ranged_with_pid,
-        global_running_sum,
+        grouped_running_sum,
     )
 
     df = spark.range(100).select(
@@ -814,7 +842,7 @@ def test_global_running_sum_bounds_df_is_consumed(spark, sf_dir):
     }
     assert pid_self != pid_wide  # the parameter is read
     assert set(pid_wide.values()) == {0}  # all keys < 1/4 of the wide span
-    out = global_running_sum(df, "v", ["k"], "cs", bounds_df=wide)
+    out = grouped_running_sum(df, "v", [], ["k"], "cs", bounds_df=wide)
     got = {r["k"]: r["cs"] for r in out.collect()}
     assert got == {float(i): i + 1 for i in range(100)}  # result unchanged
 
@@ -850,7 +878,7 @@ def test_prefix_sum_property_pathological_keys(spark):
 
     from etl_ml_pipeline_spark.operators.relational import (
         global_row_number,
-        global_running_sum,
+        grouped_running_sum,
     )
 
     keys = st.one_of(
@@ -878,7 +906,9 @@ def test_prefix_sum_property_pathological_keys(spark):
     def check(rows, parts):
         data = [(k, i + 1) for i, k in enumerate(rows)]
         df = spark.createDataFrame(data, "k double, v long")
-        fast = global_running_sum(df, "v", ["k", "v"], "cs", num_partitions=parts)
+        fast = grouped_running_sum(
+            df, "v", [], ["k", "v"], "cs", num_partitions=parts
+        )
         naive = df.withColumn(
             "cs",
             F.sum("v").over(

@@ -140,7 +140,7 @@ def test_compaction_binning_property(spark):
 
     from pyspark.sql import functions as F
 
-    from etl_ml_pipeline_spark.operators.relational import global_running_sum
+    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
 
     target = 100
 
@@ -151,7 +151,7 @@ def test_compaction_binning_property(spark):
     def run(sizes):
         rows = [(i, s) for i, s in enumerate(sizes)]
         df = spark.createDataFrame(rows, "file_id long, bytes long")
-        cum = global_running_sum(df, "bytes", ["file_id"], "cum")
+        cum = grouped_running_sum(df, "bytes", [], ["file_id"], "cum")
         binned = [
             (r["file_id"], r["bytes"], (r["cum"] - r["bytes"]) // target)
             for r in cum.collect()

@@ -102,3 +102,57 @@ def test_tuning_marker_is_session_scoped(spark):
     session_mod.tune(spark)
     assert spark.conf.get(session_mod._TUNED_MARKER) == "true"
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def _write_documents(tmp_path, n_rows: int) -> str:
+    """One-row-group documents parquet of ``n_rows`` incompressible texts."""
+    import os
+
+    table = pa.table(
+        {
+            "doc_id": pa.array(range(n_rows), type=pa.int64()),
+            "text": pa.array([os.urandom(48).hex() for _ in range(n_rows)]),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "documents.parquet"))
+    return str(tmp_path)
+
+
+def _plan_shape(df) -> str:
+    """Physical plan text without expression or plan ids."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.sub(r"#\d+L?|plan_id=\d+", "", plan)
+
+
+def test_max_partition_bytes_byte_strings_plan_alike(spark, tmp_path, fresh_cache):
+    """``spark.sql.files.maxPartitionBytes`` reads back as it was set, so
+    ``64m`` and ``67108864b`` must size a heavy scan the same way (the
+    scan estimate used to int() the raw string and raise on ``64m``)."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    sf_dir = _write_documents(tmp_path, 4000)
+    assert (tmp_path / "documents.parquet").stat().st_size > 64 * 1024
+    plans = []
+    try:
+        for value in ("64m", "67108864b"):
+            spark.conf.set(key, value)
+            tables_mod._SCAN_CACHE.clear()
+            plans.append(_plan_shape(t(spark, sf_dir, "documents", heavy=True)))
+    finally:
+        spark.conf.set(key, old)
+    assert plans[0] == plans[1]
+    assert "RoundRobinPartitioning" in plans[0]
+
+
+def test_heavy_dup_corpus_follows_scan_rebalance_rule(spark, tmp_path, fresh_cache):
+    """``_dup_corpus(heavy=True)`` spreads through the scan rebalance rule:
+    a path whose size cannot be read (a ``file://`` URI) is treated as a
+    big, already-wide scan, so no round-robin exchange is planned."""
+    from etl_ml_pipeline_spark.queries.dedup_q import _dup_corpus
+
+    sf_dir = _write_documents(tmp_path, 200)
+    corpus = _dup_corpus(spark, "file://" + sf_dir, heavy=True)
+    assert "RoundRobinPartitioning" not in _plan_shape(corpus)
+    assert corpus.count() == 200 + len(range(0, 200, 7)) + len(range(0, 200, 11))
