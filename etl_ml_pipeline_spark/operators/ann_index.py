@@ -35,12 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_ml_pipeline_spark.operators.similarity import (
-    _probe_exploded,
-    as_double,
-    cosine,
-    ivf_assign,
-)
+from etl_ml_pipeline_spark.operators.similarity import _ivf_serve, ivf_assign
 
 
 def ivf_index_write(
@@ -226,9 +221,9 @@ def ivf_topk_from_index(
     centroid_rows: list | None = None,
 ) -> DataFrame:
     """Serve top-k from a stored index: probe the query's n_probe
-    nearest centroids, equi-join the probed lists, exact cosine rerank.
-    Identical semantics to similarity.ivf_topk minus the corpus
-    assignment — the lists table already carries cent_id.
+    nearest centroids, equi-join the probed lists, exact cosine rerank —
+    similarity.ivf_topk's serve path over the stored lists, which
+    already carry cent_id.
 
     ``tombstones`` (from :func:`ivf_index_tombstones`): logically
     deleted ids, excluded via a broadcast anti-join BEFORE the
@@ -238,21 +233,12 @@ def ivf_topk_from_index(
 
     ``centroid_rows``: pre-collected quantizer rows (see
     ivf_index_write) — skips this stage's probe collect."""
-    from pyspark.sql import Window as W
-
     if tombstones is not None:
         lists = lists.join(
             F.broadcast(tombstones.select(F.col(c_id).cast("long").alias(c_id))),
             c_id,
             "left_anti",
         )
-    qb = _probe_exploded(queries, centroids, n_probe, q_id, q_vec, rows=centroid_rows)
-    cand = lists.join(F.broadcast(qb), "cent_id").withColumn(
-        "cos", cosine(as_double(F.col(q_vec)), as_double(F.col(c_vec)))
-    )
-    w = W.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "cos", "cent_id")
+    return _ivf_serve(
+        queries, centroids, lists, k, n_probe, q_id, q_vec, c_id, c_vec, centroid_rows
     )

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_ml_pipeline_spark.operators.gen_index import build_generation0
 from etl_ml_pipeline_spark.operators.text import token_hash60, word_ngrams
 
 
@@ -59,12 +60,13 @@ def build_gram_index(
     n: int = 5,
 ) -> int:
     """Batch-build the index parquet: (gh long, gen int), gen=0.
-    Returns the number of distinct grams written."""
-    grams = _bench_grams(bench, text_col, n).withColumn(
-        "gen", F.lit(0).cast("int")
+    Returns the number of distinct grams written. Refuses (ValueError,
+    storage untouched) a bench with no grams — e.g. every doc shorter
+    than ``n`` tokens."""
+    return build_generation0(
+        _bench_grams(bench, text_col, n), index_path, read_gram_index,
+        "build_gram_index",
     )
-    grams.write.mode("overwrite").partitionBy("gen").parquet(index_path)
-    return read_gram_index(bench.sparkSession, index_path).count()
 
 
 def read_gram_index(spark: SparkSession, index_path: str) -> DataFrame:

@@ -1,20 +1,47 @@
-"""Shared generation-retention machinery for persisted index tables.
+"""Shared generation machinery for persisted index tables.
 
 Three indexes persist as gen-partitioned parquet (the benchmark gram
 index, the perceptual-hash image index, and — with its own tombstone
-variant — the IVF index). Retiring a generation is the same dance
-everywhere: validate the gen exists, refuse to delete the LAST one
-(an empty parquet directory fails schema inference on the next read),
-count the doomed rows, and drop the ``gen=K`` partition directory via
-the Hadoop FS API — a partition-pruned delete, never a rewrite of the
-survivors. One definition here so a fix to the guard rails or the FS
-error path cannot silently miss a sibling index.
+variant — the IVF index). Building generation 0 and retiring a
+generation are the same dance everywhere. Build: refuse an empty input
+BEFORE touching storage (a partitioned write of zero rows replaces the
+index with a directory that fails schema inference on the next read),
+write, count from storage. Retire: validate the gen exists, refuse to
+delete the LAST one (same unreadable-empty condition), count the
+doomed rows, and drop the ``gen=K`` partition directory via the Hadoop
+FS API — a partition-pruned delete, never a rewrite of the survivors.
+One definition here so a fix to the guard rails or the FS error path
+cannot silently miss a sibling index.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def build_generation0(
+    rows: DataFrame,
+    index_path: str,
+    read: Callable[[SparkSession, str], DataFrame],
+    label: str,
+) -> int:
+    """(Re)build an index as generation 0 from ``rows`` (the index
+    columns, no ``gen``), overwriting ``index_path``. ``read`` is the
+    index's live scan; ``label`` names the caller in error messages.
+    Returns the row count read back from storage (committed truth)."""
+    if rows.isEmpty():
+        raise ValueError(
+            f"{label}: empty input — an empty partitioned index cannot be "
+            "read back, and overwriting would destroy the existing one; "
+            "build from a non-empty input instead"
+        )
+    rows.withColumn("gen", F.lit(0).cast("int")).write.mode(
+        "overwrite"
+    ).partitionBy("gen").parquet(index_path)
+    return read(rows.sparkSession, index_path).count()
 
 
 def retire_generation(

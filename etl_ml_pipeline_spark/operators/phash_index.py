@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_ml_pipeline_spark.operators.gen_index import build_generation0
+
 _HASH_BITS = 64
 
 
@@ -125,20 +127,11 @@ def build_phash_index(
 ) -> int:
     """Batch-build the index parquet: (id long, dhash string, gen int),
     gen=0. Returns the number of images indexed. Refuses an empty
-    input loudly — a partitioned write of zero rows leaves a directory
-    that fails parquet schema inference on the next read (the same
-    unreadable-empty-index condition the retire guard protects)."""
-    rows = _normalized(hashed, id_col, hash_col).withColumn(
-        "gen", F.lit(0).cast("int")
+    input loudly (gen_index.build_generation0)."""
+    return build_generation0(
+        _normalized(hashed, id_col, hash_col), index_path, read_phash_index,
+        "build_phash_index",
     )
-    if rows.isEmpty():
-        raise ValueError(
-            "build_phash_index: empty input — an empty partitioned "
-            "index cannot be read back; build from the first non-empty "
-            "batch instead"
-        )
-    rows.write.mode("overwrite").partitionBy("gen").parquet(index_path)
-    return read_phash_index(hashed.sparkSession, index_path).count()
 
 
 def read_phash_index(spark: SparkSession, index_path: str) -> DataFrame:

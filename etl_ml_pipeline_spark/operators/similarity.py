@@ -22,7 +22,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_ml_pipeline_spark.operators.base import BaseTransform
@@ -55,7 +55,31 @@ def cos_clamped(a: Column, b: Column) -> Column:
     margins, …) must clamp on BOTH engines or the ulp surfaces exactly
     on a truncation boundary (caught at synthetic sf1; see
     verify/SKILL.md). Plain trunc4(cos) outputs are safe unclamped."""
-    return F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cosine(a, b)))
+    return _clamp(cosine(a, b))
+
+
+def _clamp(cos: Column) -> Column:
+    return F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cos))
+
+
+def _rank_topk(
+    df: DataFrame,
+    score: str,
+    k: int,
+    q_id: str,
+    c_id: str,
+    ascending: bool = False,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The one per-query top-k cut every ANN variant shares: number each
+    ``q_id``'s rows by ``score`` (descending, or ascending for
+    distances), ties on the lower ``c_id``, and keep the first ``k``.
+    One shuffle on q_id for the window."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy(q_id).orderBy(order, F.asc(c_id))
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
 
 
 def brute_force_topk(
@@ -68,18 +92,11 @@ def brute_force_topk(
     c_vec: str = "c_vec",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
-    corpus, rank per query. One shuffle on q_id for the ranking window."""
-    from pyspark.sql import Window as W
-
+    corpus, rank per query."""
     joined = corpus.crossJoin(F.broadcast(queries)).withColumn(
         "cos", cosine(as_double(F.col(q_vec)), as_double(F.col(c_vec)))
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "cos")
-    )
+    return _rank_topk(joined, "cos", k, q_id, c_id).select(q_id, "rank", c_id, "cos")
 
 
 def make_hyperplanes(dim: int, n_bits: int, seed: int = 0) -> np.ndarray:
@@ -121,18 +138,13 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's LSH bucket, exact
     cosine reranking within the bucket only."""
-    from pyspark.sql import Window as W
-
     qb = add_lsh_bucket(queries, q_vec, planes, "bucket")
     cb = add_lsh_bucket(corpus, c_vec, planes, "bucket")
     cand = cb.join(F.broadcast(qb), "bucket").withColumn(
         "cos", cosine(as_double(F.col(q_vec)), as_double(F.col(c_vec)))
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "cos", "bucket")
+    return _rank_topk(cand, "cos", k, q_id, c_id).select(
+        q_id, "rank", c_id, "cos", "bucket"
     )
 
 
@@ -230,46 +242,20 @@ class SimilarityTopK(BaseTransform):
             lam = float(self.config.get("lambda", 0.7))
             pool_n = int(self.config.get("pool", 3 * k))
             # Clamp the relevance cosines to [-1, 1] like the pairwise
-            # leg below: the MMR score SUBTRACTS the two, so an
+            # leg in mmr_rerank: the MMR score SUBTRACTS the two, so an
             # unclamped 1.0000000000000002 on a duplicate vector would
             # land the ulp on a downstream truncation boundary
             # (ADVICE r14 #1 — brute_force_topk's raw cos is only safe
             # when emitted as-is).
             pool = brute_force_topk(queries, df, k=pool_n).select(
                 "q_id", "c_id",
-                F.least(
-                    F.lit(1.0), F.greatest(F.lit(-1.0), F.col("cos"))
-                ).alias("cos_qc"),
+                _clamp(F.col("cos")).alias("cos_qc"),
                 F.col("rank").alias("rk"),
             )
             vecs = df.select(
                 F.col("c_id"), as_double(F.col("c_vec")).alias("__v")
             )
-            cand = pool.join(vecs, "c_id").localCheckpoint(eager=False)
-            pairs = (
-                cand.select("q_id", F.col("c_id").alias("ca"),
-                            F.col("__v").alias("__av"))
-                .join(
-                    cand.select("q_id", F.col("c_id").alias("cb"),
-                                F.col("__v").alias("__bv")),
-                    "q_id",
-                )
-                .filter(F.col("ca") != F.col("cb"))
-                .select(
-                    "q_id", "ca", "cb",
-                    cos_clamped(
-                        F.col("__av"), F.col("__bv")
-                    ).alias("cos_cc"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            return mmr_select(
-                cand.select("q_id", "c_id", "cos_qc", "rk"),
-                pairs,
-                k=k,
-                lam=lam,
-                mu=1.0 - lam,
-            )
+            return mmr_rerank(pool.join(vecs, "c_id"), "__v", k, lam, 1.0 - lam)
         return brute_force_topk(queries, df, k=k)
 
 
@@ -336,6 +322,45 @@ def mmr_select(
         cand.groupBy("q_id")
         .cogroup(pairs.groupBy("q_id"))
         .applyInPandas(fn, "q_id long, sel_rank int, c_id long, mmr double")
+    )
+
+
+def mmr_rerank(
+    cand: DataFrame,
+    vec_col: str,
+    k: int,
+    lam: float,
+    mu: float,
+    q_id: str = "q_id",
+    c_id: str = "c_id",
+) -> DataFrame:
+    """MMR re-rank of a per-query candidate pool — the one tail every
+    MMR variant shares. ``cand``: (q_id, c_id, vec_col, cos_qc, rk), the
+    pool already cut (rk from :func:`_rank_topk`), ``vec_col`` a double
+    array and ``cos_qc`` clamped. The pool is lineage-pinned (lazy
+    localCheckpoint) so the pairwise self-join doesn't rescan what built
+    it; the pairs' clamped cosines are pinned too; then
+    :func:`mmr_select` picks ``k`` per query. Everything here is
+    k-bounded: pool rows + pool^2 pair rows per query."""
+    cand = cand.localCheckpoint(eager=False)
+    pairs = (
+        cand.select(q_id, F.col(c_id).alias("ca"), F.col(vec_col).alias("__av"))
+        .join(
+            cand.select(q_id, F.col(c_id).alias("cb"), F.col(vec_col).alias("__bv")),
+            q_id,
+        )
+        .filter(F.col("ca") != F.col("cb"))
+        .select(
+            q_id, "ca", "cb",
+            cos_clamped(F.col("__av"), F.col("__bv")).alias("cos_cc"),
+        )
+        # fresh attribute ids: the cogroup groups cand AND this
+        # cand-derived frame on q_id (self-join-ambiguous while they
+        # share lineage)
+        .localCheckpoint(eager=False)
+    )
+    return mmr_select(
+        cand.select(q_id, c_id, "cos_qc", "rk"), pairs, k=k, lam=lam, mu=mu
     )
 
 
@@ -571,22 +596,32 @@ def ivf_assign(
     zip_with-cosine × centroid-count expression formulation measured
     >10× slower (interpreted higher-order lambdas per pair).
     """
-    if rows is None:
-        rows = collect_centroid_rows(centroids, cent_id, cent_vec)
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    ids_list, mat_list = ids.tolist(), mat.tolist()
+    ids_list, mat_list = _unit_centroids(centroids, rows, cent_id, cent_vec)
 
     @F.pandas_udf("long")
     def nearest(vecs: pd.Series) -> pd.Series:
-        c = np.asarray(mat_list)  # (k, dim), unit rows
-        cid = np.asarray(ids_list)
         v = np.vstack(vecs.to_numpy()).astype(np.float64)  # (batch, dim)
         v = v / np.linalg.norm(v, axis=1, keepdims=True)
-        return pd.Series(cid[np.argmax(v @ c.T, axis=1)])
+        sims = v @ np.asarray(mat_list).T  # (batch, k)
+        return pd.Series(np.asarray(ids_list)[np.argmax(sims, axis=1)])
 
     return df.withColumn(cent_id, nearest(F.col(vec_col)))
+
+
+def _unit_centroids(
+    centroids: DataFrame,
+    rows: list | None,
+    cent_id: str = "cent_id",
+    cent_vec: str = "cent_vec",
+) -> tuple[list, list]:
+    """The quantizer as UDF-closure lists: centroid ids ascending and the
+    matching (k, dim) matrix with unit rows. Collects ``centroids`` only
+    when the caller holds no ``rows``."""
+    if rows is None:
+        rows = collect_centroid_rows(centroids, cent_id, cent_vec)
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    return [int(r[0]) for r in rows], mat.tolist()
 
 
 def _probe_exploded(
@@ -600,19 +635,14 @@ def _probe_exploded(
     """Per-query probe list: one row per (query, probed cent_id) for the
     query's ``n_probe`` nearest centroids — same broadcast-matrix
     vectorized-UDF pattern as ivf_assign; n_probe=1 reproduces it."""
-    if rows is None:
-        rows = collect_centroid_rows(centroids)
-    ids_list = [int(r[0]) for r in rows]
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat_list = (mat / np.linalg.norm(mat, axis=1, keepdims=True)).tolist()
+    ids_list, mat_list = _unit_centroids(centroids, rows)
 
     @F.pandas_udf("array<bigint>")
     def probe_list(vecs: pd.Series) -> pd.Series:
-        c = np.asarray(mat_list)
         cid = np.asarray(ids_list)
         v = np.vstack(vecs.to_numpy()).astype(np.float64)
         v = v / np.linalg.norm(v, axis=1, keepdims=True)
-        sims = v @ c.T  # (batch, k)
+        sims = v @ np.asarray(mat_list).T  # (batch, k)
         # top n_probe by (sim desc, cent_id asc): argsort on (-sim) is
         # stable, and cid is pre-sorted ascending -> ties keep low ids
         order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
@@ -648,23 +678,37 @@ def ivf_topk(
     the same centroids pass them once; default collects here (one job,
     shared by assign + probe instead of one each).
     """
-    from pyspark.sql import Window as W
-
     rows = (
         centroid_rows
         if centroid_rows is not None
         else collect_centroid_rows(centroids)
     )
     cb = ivf_assign(corpus, centroids, c_vec, c_id, rows=rows)
+    return _ivf_serve(queries, centroids, cb, k, n_probe, q_id, q_vec, c_id, c_vec, rows)
+
+
+def _ivf_serve(
+    queries: DataFrame,
+    centroids: DataFrame,
+    lists: DataFrame,
+    k: int,
+    n_probe: int,
+    q_id: str,
+    q_vec: str,
+    c_id: str,
+    c_vec: str,
+    rows: list | None,
+) -> DataFrame:
+    """The one IVF serve path over cent_id-keyed ``lists`` (in-plan
+    ``ivf_assign`` output or a stored index): probe each query's
+    ``n_probe`` nearest cells, broadcast-join the probe list on cent_id,
+    exact cosine, per-query top-k."""
     qb = _probe_exploded(queries, centroids, n_probe, q_id, q_vec, rows=rows)
-    cand = cb.join(F.broadcast(qb), "cent_id").withColumn(
+    cand = lists.join(F.broadcast(qb), "cent_id").withColumn(
         "cos", cosine(as_double(F.col(q_vec)), as_double(F.col(c_vec)))
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "cos", "cent_id")
+    return _rank_topk(cand, "cos", k, q_id, c_id).select(
+        q_id, "rank", c_id, "cos", "cent_id"
     )
 
 
@@ -850,8 +894,6 @@ def pq_adc_topk(
     scoring expression is zip_with + element_at over the codes array —
     pure JVM codegen, so the corpus-side cost is m integer lookups per
     row, the whole point of PQ."""
-    from pyspark.sql import Window as W
-
     lut, m, kcent = _adc_lut_udf(codebooks)
     qlut = queries.select(q_id, F.col(q_vec).alias("__qv")).withColumn(
         "__lut", lut(F.col("__qv"))
@@ -859,11 +901,8 @@ def pq_adc_topk(
     scored = corpus_codes.crossJoin(F.broadcast(qlut)).withColumn(
         "adc", _adc_score(codes_col, "__lut", m, kcent)
     )
-    w = W.partitionBy(q_id).orderBy(F.asc("adc"), F.asc(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "adc")
+    return _rank_topk(scored, "adc", k, q_id, c_id, ascending=True).select(
+        q_id, "rank", c_id, "adc"
     )
 
 
@@ -895,8 +934,6 @@ def ivfpq_topk(
     ``centroid_rows``: see ivf_topk — one quantizer collect shared by
     the assign and probe stages.
     """
-    from pyspark.sql import Window as W
-
     rows = (
         centroid_rows
         if centroid_rows is not None
@@ -913,11 +950,8 @@ def ivfpq_topk(
     scored = coded.join(F.broadcast(qlut), "cent_id").withColumn(
         "adc", _adc_score("pq_codes", "__lut", m, kcent)
     )
-    w = W.partitionBy(q_id).orderBy(F.asc("adc"), F.asc(c_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "adc", "cent_id")
+    return _rank_topk(scored, "adc", k, q_id, c_id, ascending=True).select(
+        q_id, "rank", c_id, "adc", "cent_id"
     )
 
 
@@ -986,8 +1020,6 @@ def ivfpq_rerank_topk(
     100 TB, the full-vector fetch is a point-lookup join on the
     candidate ids, not a scan.
     """
-    from pyspark.sql import Window as W
-
     cands = ivfpq_topk(
         queries, corpus, centroids, codebooks,
         k=n_candidates, n_probe=n_probe,
@@ -999,12 +1031,7 @@ def ivfpq_rerank_topk(
         .join(F.broadcast(queries), q_id)
         .withColumn("cos", cosine(as_double(F.col(q_vec)), as_double(F.col(c_vec))))
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id, "rank", c_id, "cos")
-    )
+    return _rank_topk(rescored, "cos", k, q_id, c_id).select(q_id, "rank", c_id, "cos")
 
 
 def ivf_mmr_topk(
@@ -1045,8 +1072,6 @@ def ivf_mmr_topk(
     ``mu`` is passed explicitly, never computed as ``1 - lam`` (Python
     1 - 0.7 = 0.30000000000000004 diverges from a SQL literal 0.3).
     """
-    from pyspark.sql import Window as W
-
     short = (
         ivfpq_topk(
             queries, corpus, centroids, codebooks,
@@ -1068,28 +1093,5 @@ def ivf_mmr_topk(
             ).alias("cos_qc"),
         )
     )
-    w = W.partitionBy(q_id).orderBy(F.desc("cos_qc"), F.asc(c_id))
-    cand = (
-        rescored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= pool)
-        .localCheckpoint(eager=False)
-    )
-    pairs = (
-        cand.select(q_id, F.col(c_id).alias("ca"), F.col("__cv").alias("__av"))
-        .join(
-            cand.select(q_id, F.col(c_id).alias("cb"), F.col("__cv").alias("__bv")),
-            q_id,
-        )
-        .filter(F.col("ca") != F.col("cb"))
-        .select(
-            q_id, "ca", "cb",
-            cos_clamped(F.col("__av"), F.col("__bv")).alias("cos_cc"),
-        )
-        # fresh attribute ids: the cogroup groups cand AND this
-        # cand-derived frame on q_id (self-join-ambiguous while they
-        # share lineage)
-        .localCheckpoint(eager=False)
-    )
-    return mmr_select(
-        cand.select(q_id, c_id, "cos_qc", "rk"), pairs, k=k, lam=lam, mu=mu
-    )
+    cand = _rank_topk(rescored, "cos_qc", pool, q_id, c_id, rank_col="rk")
+    return mmr_rerank(cand, "__cv", k, lam, mu, q_id, c_id)

@@ -15,18 +15,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_ml_pipeline_spark.operators.similarity import (
+    _rank_topk,
     as_double,
     brute_force_topk,
     collect_centroid_rows as _collect_cent_rows,
+    cos_clamped,
     cosine,
     lsh_topk,
     make_hyperplanes,
+    mmr_rerank,
+    pq_codebooks_from_rows,
 )
 from etl_ml_pipeline_spark.queries.tables import t
 
 
 def _trunc4(c: F.Column) -> F.Column:
     return F.floor(c * 10000) / 10000
+
+
+def _vecs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Embedding rows as an ANN input frame: (id_col, vec_col)."""
+    return emb.select(F.col("vec_id").alias(id_col), F.col("embedding").alias(vec_col))
 
 
 # ---------------------------------------------------------------------------
@@ -36,12 +45,8 @@ def _trunc4(c: F.Column) -> F.Column:
 
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings", heavy=True)
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     out = brute_force_topk(queries, corpus, k=5)
     return out.select(
         "q_id", "rank", "c_id", _trunc4(F.col("cos")).alias("cos")
@@ -78,21 +83,7 @@ _MMR_POOL = 12
 _MMR_K = 4
 
 
-def _cos_clamped(a: F.Column, b: F.Column) -> F.Column:
-    """Cosine clamped to [-1, 1]. The raw sequential fold returns
-    1.0000000000000002 for identical vectors (s / (sqrt(s)*sqrt(s)))
-    while DuckDB's list_cosine_similarity clamps — invisible under
-    trunc4 until MMR's 0.7*rel - 0.3*div subtraction lands the ulp
-    exactly on a truncation boundary (caught at synthetic sf1, where
-    replication guarantees identical-vector pairs and mmr = 0.4). The
-    oracle clamps explicitly too, so both engines share the exact
-    post-clamp doubles."""
-    return F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cosine(a, b)))
-
-
 def ann_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     emb = t(spark, sf_dir, "embeddings", heavy=True)
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), as_double(F.col("embedding")).alias("qv")
@@ -104,39 +95,11 @@ def ann_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.crossJoin(F.broadcast(q))
         .filter(F.col("c_id") != F.col("q_id"))
         .select(
-            "q_id", "c_id", "cv", _cos_clamped(F.col("qv"), F.col("cv")).alias("cos_qc")
+            "q_id", "c_id", "cv", cos_clamped(F.col("qv"), F.col("cv")).alias("cos_qc")
         )
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("cos_qc"), F.asc("c_id"))
-    cand = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _MMR_POOL)
-        .localCheckpoint(eager=False)
-    )
-    pairs = (
-        cand.select("q_id", F.col("c_id").alias("ca"), F.col("cv").alias("av"))
-        .join(
-            cand.select("q_id", F.col("c_id").alias("cb"), F.col("cv").alias("bv")),
-            "q_id",
-        )
-        .filter(F.col("ca") != F.col("cb"))
-        .select(
-            "q_id", "ca", "cb", _cos_clamped(F.col("av"), F.col("bv")).alias("cos_cc")
-        )
-        # fresh attribute ids: the cogroup below groups cand AND this
-        # cand-derived frame on q_id, which is self-join-ambiguous
-        # while they share lineage
-        .localCheckpoint(eager=False)
-    )
-    from etl_ml_pipeline_spark.operators.similarity import mmr_select
-
-    out = mmr_select(
-        cand.select("q_id", "c_id", "cos_qc", "rk"),
-        pairs,
-        k=_MMR_K,
-        lam=_MMR_LAMBDA,
-        mu=_MMR_MU,
-    )
+    cand = _rank_topk(scored, "cos_qc", _MMR_POOL, "q_id", "c_id", rank_col="rk")
+    out = mmr_rerank(cand, "cv", _MMR_K, _MMR_LAMBDA, _MMR_MU)
     return out.select(
         "q_id",
         "sel_rank",
@@ -789,12 +752,8 @@ ORDER BY label
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     planes = make_hyperplanes(dim=64, n_bits=8, seed=0)
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     out = lsh_topk(queries, corpus, planes, k=5)
     return out.select("q_id", "rank", "c_id", _trunc4(F.col("cos")).alias("cos")).orderBy(
         "q_id", "rank"
@@ -1795,15 +1754,9 @@ def ann_ivf_topk(
     from etl_ml_pipeline_spark.operators.similarity import ivf_topk
 
     emb = t(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     # centroid_rows (r16, VERDICT r15 #7): a composing caller (the
     # recall battery) that already collected THIS EXACT quantizer frame
     # (vec_id % 50 == 0) in the same invocation passes the rows through
@@ -1869,26 +1822,28 @@ ORDER BY q_id, rank
 # ---------------------------------------------------------------------------
 
 
+def _sqrtn_centroids(emb: DataFrame) -> DataFrame:
+    """Every max(50, floor(sqrt(N)))-th vector seeds a cell, the stride
+    broadcast from one in-plan count."""
+    stride = emb.agg(
+        F.greatest(
+            F.lit(50).cast("long"), F.floor(F.sqrt(F.count("*"))).cast("long")
+        ).alias("stride")
+    )
+    return _vecs(
+        emb.crossJoin(F.broadcast(stride)).filter(F.col("vec_id") % F.col("stride") == 0),
+        "cent_id",
+        "cent_vec",
+    )
+
+
 def ann_ivf_sqrtn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_ml_pipeline_spark.operators.similarity import ivf_topk
 
     emb = t(spark, sf_dir, "embeddings")
-    stride = emb.agg(
-        F.greatest(F.lit(50).cast("long"), F.floor(F.sqrt(F.count("*"))).cast("long")).alias(
-            "stride"
-        )
-    )
-    centroids = (
-        emb.crossJoin(F.broadcast(stride))
-        .filter(F.col("vec_id") % F.col("stride") == 0)
-        .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec"))
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    centroids = _sqrtn_centroids(emb)
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     out = ivf_topk(queries, corpus, centroids, k=5, n_probe=2)
     return out.select(
         "q_id", "rank", "c_id", _trunc4(F.col("cos")).alias("cos"), "cent_id"
@@ -2017,30 +1972,29 @@ ORDER BY vec_id
 _PQ_M, _PQ_K, _PQ_STEP = 8, 16, 31
 
 
+def _pq_codebooks(emb: DataFrame) -> list:
+    """The PQ queries' one codebook definition (the oracle replays it)."""
+    return pq_codebooks_from_rows(
+        emb, "embedding", "vec_id", m=_PQ_M, k=_PQ_K, id_step=_PQ_STEP
+    )
+
+
 def ann_pq_adc_topk(
     spark: SparkSession, sf_dir: str, codebooks: list | None = None
 ) -> DataFrame:
-    from etl_ml_pipeline_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_codebooks_from_rows,
-        pq_encode,
-    )
+    from etl_ml_pipeline_spark.operators.similarity import pq_adc_topk, pq_encode
 
     emb = t(spark, sf_dir, "embeddings")
     # codebooks: same-definition pass-through (r16, VERDICT r15 #7 —
     # see ann_ivfpq_topk); standalone default unchanged.
     if codebooks is None:
-        codebooks = pq_codebooks_from_rows(
-            emb, "embedding", "vec_id", m=_PQ_M, k=_PQ_K, id_step=_PQ_STEP
-        )
+        codebooks = _pq_codebooks(emb)
     corpus = pq_encode(
         emb.select(F.col("vec_id").alias("c_id"), "embedding"),
         codebooks,
         "embedding",
     ).select("c_id", "pq_codes")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
     out = pq_adc_topk(queries, corpus, codebooks, k=5)
     return out.select(
         "q_id", "rank", "c_id", (F.floor(F.col("adc") * 10000) / 10000).alias("adc")
@@ -2122,29 +2076,18 @@ def ann_ivfpq_topk(
     centroid_rows: list | None = None,
     codebooks: list | None = None,
 ) -> DataFrame:
-    from etl_ml_pipeline_spark.operators.similarity import (
-        ivfpq_topk,
-        pq_codebooks_from_rows,
-    )
+    from etl_ml_pipeline_spark.operators.similarity import ivfpq_topk
 
     emb = t(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
     # centroid_rows/codebooks (r16, VERDICT r15 #7): same-definition
     # pass-throughs for a composing caller (the recall battery) — the
     # %50 quantizer and the (_PQ_M,_PQ_K,_PQ_STEP) codebooks are
     # byte-identical to the standalone builds. Standalone: unchanged.
     if codebooks is None:
-        codebooks = pq_codebooks_from_rows(
-            emb, "embedding", "vec_id", m=_PQ_M, k=_PQ_K, id_step=_PQ_STEP
-        )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+        codebooks = _pq_codebooks(emb)
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     out = ivfpq_topk(
         queries, corpus, centroids, codebooks, k=5, centroid_rows=centroid_rows
     )
@@ -2247,28 +2190,17 @@ def ann_ivfpq_rerank_topk(
     centroid_rows: list | None = None,
     codebooks: list | None = None,
 ) -> DataFrame:
-    from etl_ml_pipeline_spark.operators.similarity import (
-        ivfpq_rerank_topk,
-        pq_codebooks_from_rows,
-    )
+    from etl_ml_pipeline_spark.operators.similarity import ivfpq_rerank_topk
 
     emb = t(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
     # centroid_rows/codebooks: same-definition pass-throughs (r16,
     # VERDICT r15 #7 — see ann_ivfpq_topk); standalone default
     # unchanged.
     if codebooks is None:
-        codebooks = pq_codebooks_from_rows(
-            emb, "embedding", "vec_id", m=_PQ_M, k=_PQ_K, id_step=_PQ_STEP
-        )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+        codebooks = _pq_codebooks(emb)
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     out = ivfpq_rerank_topk(
         queries,
         corpus,
@@ -2393,24 +2325,13 @@ _MMR_IVF_CANDS = 50
 
 
 def ann_mmr_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_ml_pipeline_spark.operators.similarity import (
-        ivf_mmr_topk,
-        pq_codebooks_from_rows,
-    )
+    from etl_ml_pipeline_spark.operators.similarity import ivf_mmr_topk
 
     emb = t(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    codebooks = pq_codebooks_from_rows(
-        emb, "embedding", "vec_id", m=_PQ_M, k=_PQ_K, id_step=_PQ_STEP
-    )
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
+    codebooks = _pq_codebooks(emb)
+    queries = _vecs(emb.filter(F.col("vec_id") < 8), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     out = ivf_mmr_topk(
         queries,
         corpus,
@@ -2588,22 +2509,9 @@ def ann_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    stride = emb.agg(
-        F.greatest(
-            F.lit(50).cast("long"), F.floor(F.sqrt(F.count("*"))).cast("long")
-        ).alias("stride")
-    )
-    centroids = (
-        emb.crossJoin(F.broadcast(stride))
-        .filter(F.col("vec_id") % F.col("stride") == 0)
-        .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec"))
-    )
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    centroids = _sqrtn_centroids(emb)
+    queries = _vecs(emb.filter(F.col("vec_id") < 10), "q_id", "q_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     bf = brute_force_topk(queries, corpus, k=10).select("q_id", "c_id")
     # r15 §12: the stride-derived quantizer is collected ONCE and shared
     # by both probe settings' assign+probe stages (was 4 driver-sync
@@ -2731,11 +2639,6 @@ def ann_recall_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows are re-collected from parquet every run); the only collects
     # left are the two shared ones plus sqrtn's stride aggregate, which
     # a DIFFERENT quantizer definition genuinely requires.
-    from etl_ml_pipeline_spark.operators.similarity import (
-        collect_centroid_rows,
-        pq_codebooks_from_rows,
-    )
-
     emb = t(spark, sf_dir, "embeddings")
     # r15 §13 (guide §2.6): each member builder runs small eager
     # driver-sync jobs before returning its lazy plan; build everything
@@ -2750,18 +2653,11 @@ def ann_recall_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=len(_BATTERY) + 2) as pool:
         rows_f = pool.submit(
-            lambda: collect_centroid_rows(
-                emb.filter(F.col("vec_id") % 50 == 0).select(
-                    F.col("vec_id").alias("cent_id"),
-                    F.col("embedding").alias("cent_vec"),
-                )
+            lambda: _collect_cent_rows(
+                _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
             )
         )
-        cbs_f = pool.submit(
-            lambda: pq_codebooks_from_rows(
-                emb, "embedding", "vec_id", m=_PQ_M, k=_PQ_K, id_step=_PQ_STEP
-            )
-        )
+        cbs_f = pool.submit(_pq_codebooks, emb)
 
         def _build(m):
             name, fn = m[0], m[1]
@@ -2860,21 +2756,17 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     path = _run_scoped_index_dir("ivf_persisted")
     # r15 §12: one quantizer collect shared by the build-assign and the
     # serve-probe stages (was one driver-sync job per stage)
     cent_rows = _collect_cent_rows(centroids)
     ivf_index_write(corpus, centroids, path, centroid_rows=cent_rows)
     stored_cents, stored_lists = ivf_index_read(spark, path)
-    queries = emb.filter(
-        (F.col("vec_id") >= 10) & (F.col("vec_id") < 20)
-    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    queries = _vecs(
+        emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 20)), "q_id", "q_vec"
+    )
     out = ivf_topk_from_index(
         queries, stored_cents, stored_lists, k=5, n_probe=2,
         centroid_rows=cent_rows,
@@ -2953,12 +2845,8 @@ def ann_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
+    corpus = _vecs(emb, "c_id", "c_vec")
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
     path = _run_scoped_index_dir("ivf_incr")
     # r15 §12: one quantizer collect shared by build, append and serve
     # (was three driver-sync jobs; parquet round-trips doubles
@@ -2973,9 +2861,9 @@ def ann_ivf_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_rows=cent_rows,
     )
     stored_cents, stored_lists = ivf_index_read(spark, path)
-    queries = emb.filter(
-        (F.col("vec_id") >= 20) & (F.col("vec_id") < 30)
-    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    queries = _vecs(
+        emb.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 30)), "q_id", "q_vec"
+    )
     out = ivf_topk_from_index(
         queries, stored_cents, stored_lists, k=5, n_probe=1,
         centroid_rows=cent_rows,
@@ -3013,12 +2901,8 @@ def ann_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
+    corpus = _vecs(emb, "c_id", "c_vec")
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
     path = _run_scoped_index_dir("ivf_delete")
     # r15 §12: one quantizer collect shared by build and serve
     cent_rows = _collect_cent_rows(centroids)
@@ -3026,9 +2910,9 @@ def ann_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_index_delete(corpus.filter(F.col("c_id") % 7 == 3), path)
     stored_cents, stored_lists = ivf_index_read(spark, path)
     tombs = ivf_index_tombstones(spark, path)
-    queries = emb.filter(
-        (F.col("vec_id") >= 30) & (F.col("vec_id") < 40)
-    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    queries = _vecs(
+        emb.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 40)), "q_id", "q_vec"
+    )
     out = ivf_topk_from_index(
         queries, stored_cents, stored_lists, k=5, n_probe=2, tombstones=tombs,
         centroid_rows=cent_rows,
@@ -3112,12 +2996,8 @@ def ann_ivf_update_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
+    corpus = _vecs(emb, "c_id", "c_vec")
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
     path = _run_scoped_index_dir("ivf_update")
     # r15 §12: one quantizer collect shared by build, append and serve
     # (the quantizer is FROZEN across the update by contract)
@@ -3131,9 +3011,9 @@ def ann_ivf_update_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_rows=cent_rows,
     )
     stored_cents, stored_lists = ivf_index_read(spark, path)
-    queries = emb.filter(
-        (F.col("vec_id") >= 40) & (F.col("vec_id") < 50)
-    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    queries = _vecs(
+        emb.filter((F.col("vec_id") >= 40) & (F.col("vec_id") < 50)), "q_id", "q_vec"
+    )
     out = ivf_topk_from_index(
         queries, stored_cents, stored_lists, k=5, n_probe=2,
         centroid_rows=cent_rows,
@@ -3268,15 +3148,11 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "documents",
     )
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
+    queries = _vecs(
+        emb.filter((F.col("vec_id") >= 30) & (F.col("vec_id") < 40)), "q_id", "q_vec"
     )
-    queries = emb.filter(
-        (F.col("vec_id") >= 30) & (F.col("vec_id") < 40)
-    ).select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    ).join(allowed, "c_id", "left_semi")
+    corpus = _vecs(emb, "c_id", "c_vec").join(allowed, "c_id", "left_semi")
     out = ivf_topk(queries, corpus, centroids, k=5, n_probe=2)
     return out.select(
         "q_id", "rank", "c_id", _trunc4(F.col("cos")).alias("cos"), "cent_id"
@@ -3426,12 +3302,8 @@ def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    centroids = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
-    )
+    centroids = _vecs(emb.filter(F.col("vec_id") % 50 == 0), "cent_id", "cent_vec")
+    corpus = _vecs(emb, "c_id", "c_vec")
     path = _run_scoped_index_dir("ivf_stats")
     ivf_index_write(corpus, centroids, path)
     _, lists = ivf_index_read(spark, path)

@@ -1630,12 +1630,13 @@ def stream_cusum_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sessionize_events) become +1/-1 boundary events; the running sum of
 # deltas in time order is the live concurrency, and its per-day max is
 # the peak. A naive running sum is a single-partition global window
-# (the classic scale-killer); here it is two-phase, the prefix-sum
-# analog of operators/relational.global_row_number:
-#   1. per-day boundary partial sums (one small aggregate),
-#   2. cumulative carry-in offset per day (window over ~#days rows),
-#   3. within-day running sum (windows partitioned by day, parallel)
-#      + broadcast carry-in — identical to the global scan.
+# (the classic scale-killer); here it is two-phase, with no join:
+#   1. within-day running sum (a window partitioned by day, parallel),
+#   2. ONE per-day aggregate: max running sum, day delta sum, sessions
+#      started (~#days rows),
+#   3. carry-in = an unpartitioned running window over the per-day delta
+#      sums (rows before the day); peak = max_run + carry, identical to
+#      the global scan because the carry is constant within a day.
 # Tie order (ts asc, delta desc: a session starting the instant another
 # ends counts as overlapping) is mirrored in the oracle; among equal
 # (ts, delta) rows prefix sums are order-invariant, so the per-day max

@@ -23,7 +23,10 @@ JVM, no JDBC) so it runs in a couple of seconds:
    ``local[``, ``spark.driver.memory`` or the two sizing env variables;
 9. one two-phase prefix primitive: no package module but
    ``operators/relational.py`` names ``_ranged_with_pid`` in its code
-   (call ``grouped_running_sum`` instead of re-assembling it).
+   (call ``grouped_running_sum`` instead of re-assembling it);
+10. one ANN rerank core: no package module but
+   ``operators/similarity.py`` calls ``mmr_select(`` or defines a cosine
+   clamp in its code (call ``mmr_rerank`` / ``cos_clamped`` instead).
 
 Escape hatch for genuinely unrelated emergency commits:
 ``PRECOMMIT_SKIP=1 python scripts/precommit_check.py``.
@@ -212,10 +215,23 @@ def main() -> None:
             fail(f"{path.relative_to(REPO)} names _ranged_with_pid — call "
                  "operators.relational.grouped_running_sum instead")
 
+    # 10. one ANN rerank core: similarity.py owns the MMR tail and the
+    # [-1, 1] cosine clamp, so a fix to either cannot miss a sibling.
+    ann_home = REPO / "etl_ml_pipeline_spark" / "operators" / "similarity.py"
+    rerank = re.compile(r"mmr_select\(|def \w*cos\w*clamp"
+                        r"|least\(F\.lit\(1\.0\), F\.greatest\(F\.lit\(-1\.0\)"
+                        r"|greatest\(F\.lit\(-1\.0\), F\.least\(F\.lit\(1\.0\)")
+    for path in package:
+        hit = path != ann_home and rerank.search(_code(path.read_text()))
+        if hit:
+            fail(f"{path.relative_to(REPO)} re-implements the ANN rerank core "
+                 f"({hit.group()!r}) — call operators.similarity.mmr_rerank / "
+                 "cos_clamped instead")
+
     print(
         f"precommit_check: OK — catalog {len(qs)} queries, pin + "
         "CATALOG.md + oracles + staleness + README + scripts + session policy + "
-        "prefix primitive consistent"
+        "prefix primitive + ANN rerank core consistent"
     )
 
 

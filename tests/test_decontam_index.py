@@ -37,6 +37,18 @@ def test_build_counts_distinct_grams(spark, index_path):
     assert idx.select("gen").distinct().collect()[0][0] == 0
 
 
+def test_empty_rebuild_refused_and_index_kept(spark, index_path):
+    # 8 tokens -> 4 distinct word 5-grams
+    eight = "one two three four five six seven eight"
+    assert build_gram_index(_docs(spark, [(1, eight)]), index_path) == 4
+    # every doc below 5 tokens: no grams; the overwrite used to run and
+    # leave an unreadable directory in place of the live index
+    short = _docs(spark, [(2, "too short"), (3, "four tokens right here")])
+    with pytest.raises(ValueError, match="empty input"):
+        build_gram_index(short, index_path)
+    assert read_gram_index(spark, index_path).count() == 4
+
+
 def test_append_only_new_grams(spark, index_path):
     build_gram_index(_docs(spark, [(1, SENT_A)]), index_path)
     # SENT_C shares exactly two 5-grams with SENT_A ("the quick brown

@@ -156,3 +156,19 @@ def test_heavy_dup_corpus_follows_scan_rebalance_rule(spark, tmp_path, fresh_cac
     corpus = _dup_corpus(spark, "file://" + sf_dir, heavy=True)
     assert "RoundRobinPartitioning" not in _plan_shape(corpus)
     assert corpus.count() == 200 + len(range(0, 200, 7)) + len(range(0, 200, 11))
+
+
+def test_heavy_dup_corpus_plans_one_round_robin(spark, tmp_path, fresh_cache):
+    """Above the plain 512 KB-per-core floor both the scan rule and the
+    heavy rule would fire; ``_dup_corpus(heavy=True)`` reads the documents
+    as one heavy scan, so exactly one round-robin exchange is planned (the
+    exploded rows used to be re-spread by a second one)."""
+    from etl_ml_pipeline_spark.queries.dedup_q import _dup_corpus
+
+    n = 30_000
+    sf_dir = _write_documents(tmp_path, n)
+    floor = tables_mod._REBALANCE_MIN_BYTES_PER_CORE * spark.sparkContext.defaultParallelism
+    assert (tmp_path / "documents.parquet").stat().st_size > floor
+    corpus = _dup_corpus(spark, sf_dir, heavy=True)
+    assert _plan_shape(corpus).count("RoundRobinPartitioning") == 1
+    assert corpus.count() == n + len(range(0, n, 7)) + len(range(0, n, 11))
