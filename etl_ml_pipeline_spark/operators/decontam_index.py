@@ -38,19 +38,20 @@ from etl_ml_pipeline_spark.operators.gen_index import build_generation0
 from etl_ml_pipeline_spark.operators.text import token_hash60, word_ngrams
 
 
+def _doc_grams(
+    bench: DataFrame, text_col: str, n: int
+) -> DataFrame:
+    """60-bit gram hashes of a benchmark frame, distinct per doc: (gh long)."""
+    return bench.select(
+        F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("gram")
+    ).select(token_hash60(F.col("gram")).alias("gh"))
+
+
 def _bench_grams(
     bench: DataFrame, text_col: str, n: int
 ) -> DataFrame:
     """DISTINCT 60-bit gram hashes of a benchmark frame: (gh long)."""
-    return (
-        bench.select(
-            F.explode(
-                F.array_distinct(word_ngrams(F.col(text_col), n))
-            ).alias("gram")
-        )
-        .select(token_hash60(F.col("gram")).alias("gh"))
-        .distinct()
-    )
+    return _doc_grams(bench, text_col, n).distinct()
 
 
 def build_gram_index(
@@ -63,9 +64,10 @@ def build_gram_index(
     Returns the number of distinct grams written. Refuses (ValueError,
     storage untouched) a bench with no grams — e.g. every doc shorter
     than ``n`` tokens."""
+    grams = _doc_grams(bench, text_col, n)
     return build_generation0(
-        _bench_grams(bench, text_col, n), index_path, read_gram_index,
-        "build_gram_index",
+        grams.distinct(), index_path, read_gram_index, "build_gram_index",
+        probe=grams,
     )
 
 

@@ -27,12 +27,17 @@ def build_generation0(
     index_path: str,
     read: Callable[[SparkSession, str], DataFrame],
     label: str,
+    probe: DataFrame | None = None,
 ) -> int:
     """(Re)build an index as generation 0 from ``rows`` (the index
     columns, no ``gen``), overwriting ``index_path``. ``read`` is the
     index's live scan; ``label`` names the caller in error messages.
+    ``probe`` (default ``rows``) is the frame the empty-input guard
+    tests: pass the narrow frame ``rows`` aggregates, which is empty
+    exactly when ``rows`` is, so the guard's one-row limit stops early
+    instead of running the aggregate's shuffle a second time.
     Returns the row count read back from storage (committed truth)."""
-    if rows.isEmpty():
+    if (rows if probe is None else probe).isEmpty():
         raise ValueError(
             f"{label}: empty input — an empty partitioned index cannot be "
             "read back, and overwriting would destroy the existing one; "

@@ -30,7 +30,7 @@ from etl_ml_pipeline_spark.operators.dedup import (
     shingle_df,
     simhash16,
 )
-from etl_ml_pipeline_spark.queries.tables import t
+from etl_ml_pipeline_spark.queries.tables import spread_heavy, t
 
 
 # Id offset of the injected copies. Far above any base doc_id, so copies
@@ -49,13 +49,13 @@ def _dup_corpus(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFr
     A 3-way self-union re-executes the documents scan per branch (3x I/O,
     and 3x the partition count when the scan is rebalanced); instead each
     row emits its 1-3 copies through an explode of a compacted struct
-    array — same rows, one scan, one stage. ``heavy=True`` reads the
-    documents as a heavy scan for the compute-bound consumers
-    (MinHash/SimHash hashing): the scan rebalance rule fans it out
-    across all cores before the explode, once; tiny inputs and
-    already-wide scans stay unshuffled.
+    array — same rows, one scan, one stage. ``heavy=True`` fans the
+    corpus out across all cores *after* the explode for the
+    compute-bound consumers (MinHash/SimHash hashing), by the heavy scan
+    rule, unless the plain scan rule already spread the documents; tiny
+    inputs and already-wide scans stay unshuffled.
     """
-    docs = t(spark, sf_dir, "documents", heavy=heavy).select("doc_id", "text")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     copy = F.struct(F.col("doc_id").alias("doc_id"), F.col("text").alias("text"))
     exact = F.when(
         F.col("doc_id") % 7 == 0,
@@ -70,9 +70,10 @@ def _dup_corpus(spark: SparkSession, sf_dir: str, heavy: bool = False) -> DataFr
             F.concat(F.col("text"), F.lit(" extra tail")).alias("text"),
         ),
     )
-    return docs.select(
+    corpus = docs.select(
         F.explode(F.array_compact(F.array(copy, exact, near))).alias("c")
     ).select("c.doc_id", "c.text")
+    return spread_heavy(spark, corpus, sf_dir, "documents") if heavy else corpus
 
 
 _DUP_CORPUS_SQL = f"""

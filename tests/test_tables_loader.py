@@ -160,9 +160,9 @@ def test_heavy_dup_corpus_follows_scan_rebalance_rule(spark, tmp_path, fresh_cac
 
 def test_heavy_dup_corpus_plans_one_round_robin(spark, tmp_path, fresh_cache):
     """Above the plain 512 KB-per-core floor both the scan rule and the
-    heavy rule would fire; ``_dup_corpus(heavy=True)`` reads the documents
-    as one heavy scan, so exactly one round-robin exchange is planned (the
-    exploded rows used to be re-spread by a second one)."""
+    heavy rule would fire; ``_dup_corpus(heavy=True)`` keeps the scan
+    rule's exchange only, so exactly one round-robin exchange is planned
+    (the exploded rows used to be re-spread by a second one)."""
     from etl_ml_pipeline_spark.queries.dedup_q import _dup_corpus
 
     n = 30_000
@@ -171,4 +171,25 @@ def test_heavy_dup_corpus_plans_one_round_robin(spark, tmp_path, fresh_cache):
     assert (tmp_path / "documents.parquet").stat().st_size > floor
     corpus = _dup_corpus(spark, sf_dir, heavy=True)
     assert _plan_shape(corpus).count("RoundRobinPartitioning") == 1
+    assert corpus.count() == n + len(range(0, n, 7)) + len(range(0, n, 11))
+
+
+def test_heavy_dup_corpus_spreads_after_explode_below_plain_floor(
+    spark, tmp_path, fresh_cache
+):
+    """Between the heavy and the plain floor only the heavy rule fires,
+    and ``_dup_corpus(heavy=True)`` applies it to the exploded rows: one
+    round-robin exchange, planned above the ``Generate``."""
+    from etl_ml_pipeline_spark.queries.dedup_q import _dup_corpus
+
+    n = 2_000
+    sf_dir = _write_documents(tmp_path, n)
+    cores = spark.sparkContext.defaultParallelism
+    size = (tmp_path / "documents.parquet").stat().st_size
+    assert tables_mod._HEAVY_MIN_BYTES_PER_CORE * cores <= size
+    assert size < tables_mod._REBALANCE_MIN_BYTES_PER_CORE * cores
+    corpus = _dup_corpus(spark, sf_dir, heavy=True)
+    plan = _plan_shape(corpus)
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert plan.index("RoundRobinPartitioning") < plan.index("Generate")
     assert corpus.count() == n + len(range(0, n, 7)) + len(range(0, n, 11))
