@@ -12,6 +12,7 @@ the optimizer sees declared intent, not an opaque Python function.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_ml_pipeline_spark.operators.base import BaseTransform
@@ -174,8 +175,6 @@ def cdc_latest_view(
     idempotent. ``delete_col`` (boolean) marks tombstones; rows whose
     LATEST version is a delete disappear from the view.
     """
-    from pyspark.sql import Window as W
-
     b = base.withColumn("__src", F.lit(0))
     u = updates.withColumn("__src", F.lit(1))
     if delete_col is None:
@@ -213,8 +212,6 @@ def scd2_history(
     per key are typically few (version chains), so per-partition window
     state stays tiny regardless of total table size.
     """
-    from pyspark.sql import Window as W
-
     w = W.partitionBy(*keys).orderBy(F.col(version_col).asc())
     return (
         changes.withColumn("valid_from", F.col(version_col))
@@ -426,8 +423,6 @@ def grouped_running_sum(
     callers that need bit-identical totals (interpolated_percentiles)
     get them.
     """
-    from pyspark.sql import Window as W
-
     from etl_ml_pipeline_spark.operators.joins import null_safe_join
 
     spark = df.sparkSession
@@ -491,8 +486,8 @@ def grouped_running_sum(
 MIXTURE_MAX_GROUPS = 10_000
 
 
-def _mixture_total(gcol: str, w_all) -> Column:
-    """``sum(__w)`` over the per-group frame, failing the query in the
+def _mixture_total(gcol: str, wcol: str, w_all) -> Column:
+    """``sum(wcol)`` over the per-group frame, failing the query in the
     same window when the frame holds more than MIXTURE_MAX_GROUPS rows."""
     return F.when(
         F.count(F.lit(1)).over(w_all) > MIXTURE_MAX_GROUPS,
@@ -500,7 +495,42 @@ def _mixture_total(gcol: str, w_all) -> Column:
             f"group_col {gcol!r} has more than {MIXTURE_MAX_GROUPS} distinct "
             "values; a mixture needs a bounded dimension such as source or lang"
         )),
-    ).otherwise(F.sum("__w").over(w_all))
+    ).otherwise(F.sum(wcol).over(w_all))
+
+
+def largest_remainder(
+    weights: DataFrame, key: str, weight_col: str, total: int, out_col: str
+) -> DataFrame:
+    """Split the integer ``total`` across ``weights``' rows (one per
+    ``key``) in proportion to ``weight_col`` by largest remainder
+    (Hamilton): total*w DIV sum(w) each, then one leftover unit each to
+    the largest remainders, ties on the lower ``key``. Returns
+    ``weights`` plus ``out_col``, summing to ``total`` exactly.
+
+    Scale: unpartitioned windows over the |keys|-row frame (one task,
+    bounded by MIXTURE_MAX_GROUPS), not agg + crossJoin diamonds, which
+    re-derive the weights' lineage once per branch.
+    """
+    w_all = W.partitionBy()
+    quota = weights.withColumn(
+        "__wt", _mixture_total(key, weight_col, w_all)
+    ).select(
+        *weights.columns,
+        F.expr(f"{total} * {weight_col} DIV __wt").alias("__base"),
+        F.expr(f"({total} * {weight_col}) % __wt").alias("__rem"),
+    )
+    w_rem = W.orderBy(F.desc("__rem"), key)
+    return (
+        quota.withColumn("__spare", F.lit(total) - F.sum("__base").over(w_all))
+        .withColumn("__pos", F.row_number().over(w_rem))
+        .select(
+            *weights.columns,
+            (
+                F.col("__base")
+                + F.when(F.col("__pos") <= F.col("__spare"), 1).otherwise(0)
+            ).alias(out_col),
+        )
+    )
 
 
 @register_transform("token_budget_mixture")
@@ -532,8 +562,6 @@ class TokenBudgetMixture(BaseTransform):
             raise ValueError("budget_tokens must be positive")
 
     def transform(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window as W
-
         from etl_ml_pipeline_spark.operators.text import token_count
 
         budget = int(self.config["budget_tokens"])
@@ -548,35 +576,9 @@ class TokenBudgetMixture(BaseTransform):
         weights = (
             df.select(gcol).distinct().select(F.col(gcol), wexpr.alias("__w"))
         ).filter(F.col("__w") > 0)
-        # r15 optimization: weight total and spare as unpartitioned
-        # window sums over the |groups|-row frame instead of agg +
-        # crossJoin diamonds — the diamond re-derives the corpus-scale
-        # distinct() once per branch (column pruning de-identifies the
-        # subtrees, so exchange reuse never fires). Same integer
-        # arithmetic — identical allocation (mirrors
-        # sample_exact_allocation).
-        # The windowed frame is |distinct group_col| rows, bounded by
-        # _mixture_total (the w_rem rank window below needs it too).
-        w_all = W.partitionBy()
-        quota = weights.withColumn("__wt", _mixture_total(gcol, w_all)).select(
-            gcol,
-            F.expr(f"{budget} * __w DIV __wt").alias("__base"),
-            F.expr(f"({budget} * __w) % __wt").alias("__rem"),
-        )
-        w_rem = W.orderBy(F.desc("__rem"), gcol)  # |groups|-sized window
-        alloc = (
-            quota.withColumn(
-                "__spare", F.lit(budget) - F.sum("__base").over(w_all)
-            )
-            .withColumn("__pos", F.row_number().over(w_rem))
-            .select(
-                gcol,
-                (
-                    F.col("__base")
-                    + F.when(F.col("__pos") <= F.col("__spare"), 1).otherwise(0)
-                ).alias("__budget"),
-            )
-        )
+        alloc = largest_remainder(
+            weights, gcol, "__w", budget, "__budget"
+        ).select(gcol, "__budget")
         cum = grouped_running_sum(
             df.withColumn(
                 "__ntok", token_count(F.col(text_col)).cast("long")
@@ -683,8 +685,6 @@ class MixtureReweight(BaseTransform):
         # mixture_doremi_weights).
         # The windowed frame is |distinct group_col| rows; the final
         # total checks the same bound as TokenBudgetMixture above.
-        from pyspark.sql import Window as W
-
         w_all = W.partitionBy()
         for _ in range(rounds):
             per = (
@@ -700,7 +700,7 @@ class MixtureReweight(BaseTransform):
                 .withColumn("__w", F.expr("__w * (1000000 + __boost) div 1000000"))
                 .drop("__tot", "__share", "__boost")
             )
-        weights = per.withColumn("__tot", _mixture_total(gcol, w_all)).select(
+        weights = per.withColumn("__tot", _mixture_total(gcol, "__w", w_all)).select(
             gcol,
             "n_docs",
             "mean_q_ppm",
@@ -855,6 +855,33 @@ def group_ols(
     )
 
 
+def _nearest_rank_walk(grid: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """``grid`` (one row per (keys, value) with its frequency ``__f``)
+    plus the per-key cumulative-frequency walk ``__cum`` and group size
+    ``__total``."""
+    w_cum = (
+        W.partitionBy(*keys)
+        .orderBy(value_col)
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    return grid.select(
+        *grid.columns,
+        F.sum("__f").over(w_cum).alias("__cum"),
+        F.sum("__f").over(W.partitionBy(*keys)).alias("__total"),
+    )
+
+
+def _nearest_rank_cut(value_col: str, num: int, den: int) -> Column:
+    """The smallest value whose cumulative frequency reaches rank
+    k = ceil(num/den * n), in integer arithmetic."""
+    return F.min(
+        F.when(
+            F.col("__cum") >= F.expr(f"({num} * __total + {den - 1}) div {den}"),
+            F.col(value_col),
+        )
+    )
+
+
 def nearest_rank_percentiles(
     df: DataFrame,
     keys: list[str],
@@ -880,32 +907,38 @@ def nearest_rank_percentiles(
     one per-key window over the distinct-value grid, one final
     aggregate — every stage bounded by grid cardinality.
     """
-    from pyspark.sql.window import Window
-
     freqs = df.groupBy(*keys, value_col).agg(F.count("*").alias("__f"))
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    return _nearest_rank_walk(freqs, keys, value_col).groupBy(*keys).agg(
+        *(
+            _nearest_rank_cut(value_col, num, den).alias(name)
+            for name, (num, den) in pcts.items()
+        )
     )
-    w_tot = Window.partitionBy(*keys)
-    ranked = freqs.select(
-        *keys,
-        value_col,
-        F.sum("__f").over(w_cum).alias("__cum"),
-        F.sum("__f").over(w_tot).alias("__total"),
+
+
+def nearest_rank_cuts(
+    grid: DataFrame,
+    keys: list[str],
+    value_col: str,
+    pcts: dict[str, tuple[int, int]],
+) -> DataFrame:
+    """The window form of :func:`nearest_rank_percentiles`: ``grid``
+    holds one row per (keys, value) with its frequency in ``__f``;
+    returns every grid row plus, per ``pcts`` entry, its key's
+    percentile as a column — for results that depend only on (keys,
+    value), with no aggregate + join-back diamond.
+
+    Scale: the walk and the cuts chain on one exchange of the grid by
+    keys (``keys=[]`` is one task: use it for value-bounded grids).
+    """
+    w_key = W.partitionBy(*keys)
+    return _nearest_rank_walk(grid, keys, value_col).select(
+        *grid.columns,
+        *(
+            _nearest_rank_cut(value_col, num, den).over(w_key).alias(name)
+            for name, (num, den) in pcts.items()
+        ),
     )
-    aggs = [
-        F.min(
-            F.when(
-                F.col("__cum")
-                >= F.expr(f"({num} * __total + {den} - 1) div {den}"),
-                F.col(value_col),
-            )
-        ).alias(name)
-        for name, (num, den) in pcts.items()
-    ]
-    return ranked.groupBy(*keys).agg(*aggs)
 
 
 def interpolated_percentiles(
@@ -1011,8 +1044,6 @@ def skyline_2d(df: DataFrame, min_col: str, max_col: str) -> DataFrame:
     dominance SQL, so the differential checks the reformulation, not
     a shared algorithm.
     """
-    from pyspark.sql import Window as W
-
     grid = df.groupBy(max_col).agg(F.min(min_col).alias("__mp"))
     w_suf = (
         W.orderBy(F.desc(max_col))

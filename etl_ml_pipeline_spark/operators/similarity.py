@@ -55,11 +55,7 @@ def cos_clamped(a: Column, b: Column) -> Column:
     margins, …) must clamp on BOTH engines or the ulp surfaces exactly
     on a truncation boundary (caught at synthetic sf1; see
     verify/SKILL.md). Plain trunc4(cos) outputs are safe unclamped."""
-    return _clamp(cosine(a, b))
-
-
-def _clamp(cos: Column) -> Column:
-    return F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cos))
+    return F.least(F.lit(1.0), F.greatest(F.lit(-1.0), cosine(a, b)))
 
 
 def _rank_topk(
@@ -241,21 +237,22 @@ class SimilarityTopK(BaseTransform):
         if mode == "mmr":
             lam = float(self.config.get("lambda", 0.7))
             pool_n = int(self.config.get("pool", 3 * k))
-            # Clamp the relevance cosines to [-1, 1] like the pairwise
-            # leg in mmr_rerank: the MMR score SUBTRACTS the two, so an
-            # unclamped 1.0000000000000002 on a duplicate vector would
-            # land the ulp on a downstream truncation boundary
-            # (ADVICE r14 #1 — brute_force_topk's raw cos is only safe
-            # when emitted as-is).
-            pool = brute_force_topk(queries, df, k=pool_n).select(
-                "q_id", "c_id",
-                _clamp(F.col("cos")).alias("cos_qc"),
-                F.col("rank").alias("rk"),
+            # Rank the pool by the CLAMPED cosine, as ann_mmr_rerank_topk
+            # does: the MMR score subtracts relevance and redundancy, so
+            # an unclamped 1.0000000000000002 on a duplicate vector
+            # would land the ulp on a downstream truncation boundary,
+            # and ranking by the raw value would put that duplicate
+            # ahead of an equally relevant lower c_id.
+            scored = df.crossJoin(F.broadcast(queries)).select(
+                "q_id",
+                "c_id",
+                as_double(F.col("c_vec")).alias("__v"),
+                cos_clamped(
+                    as_double(F.col("q_vec")), as_double(F.col("c_vec"))
+                ).alias("cos_qc"),
             )
-            vecs = df.select(
-                F.col("c_id"), as_double(F.col("c_vec")).alias("__v")
-            )
-            return mmr_rerank(pool.join(vecs, "c_id"), "__v", k, lam, 1.0 - lam)
+            pool = _rank_topk(scored, "cos_qc", pool_n, "q_id", "c_id", rank_col="rk")
+            return mmr_rerank(pool, "__v", k, lam, 1.0 - lam)
         return brute_force_topk(queries, df, k=k)
 
 

@@ -523,9 +523,11 @@ ORDER BY day
 # CENT GRID — sums and sums-of-squares are integer arithmetic (cents
 # fit a BIGINT at any realistic scale), so the derived mean/std are
 # identical doubles on both engines with zero reduction-order risk.
-# Scale: one percentile aggregation (exact sort-per-group; swap for
-# approx_percentile cutpoints at unbounded group sizes), a broadcast
-# join of per-type bounds, and one integer-sum aggregation.
+# Scale: one events scan aggregated to the (event_type, cents)
+# frequency grid; the p01/p99 cuts are per-type windows over that grid
+# (operators/relational.nearest_rank_cuts — one exchange, |distinct
+# cents| rows per type, never N); the clamped moments are one
+# integer-sum aggregate over the same grid. No join.
 # ---------------------------------------------------------------------------
 
 
@@ -543,49 +545,17 @@ def feature_winsorize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # perplexity buckets): a row's clamp depends only on (event_type,
     # c), so the winsorize bounds AND the clamped moments all come from
     # the (event_type, c) frequency grid — one events scan, cuts as
-    # per-type window aggregates (identical k = ceil(p*n) integer
-    # arithmetic), no event-scale broadcast-join-back (which re-derived
-    # the scan per branch).
-    from pyspark.sql import Window as W
+    # per-type window aggregates, no event-scale broadcast-join-back
+    # (which re-derived the scan per branch).
+    from etl_ml_pipeline_spark.operators.relational import nearest_rank_cuts
 
     grid = (
         ev.select("event_type", cents.alias("c"))
         .groupBy("event_type", "c")
         .agg(F.count("*").alias("__f"))
     )
-    w_cum = (
-        W.partitionBy("event_type")
-        .orderBy("c")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    w_tot = W.partitionBy("event_type")
-    ranked = grid.select(
-        "event_type",
-        "c",
-        "__f",
-        F.sum("__f").over(w_cum).alias("__cum"),
-        F.sum("__f").over(w_tot).alias("__total"),
-    )
-    tagged = ranked.select(
-        "event_type",
-        "c",
-        "__f",
-        F.min(
-            F.when(
-                F.col("__cum") >= F.expr("(1 * __total + 99) div 100"),
-                F.col("c"),
-            )
-        )
-        .over(w_tot)
-        .alias("lo_c"),
-        F.min(
-            F.when(
-                F.col("__cum") >= F.expr("(99 * __total + 99) div 100"),
-                F.col("c"),
-            )
-        )
-        .over(w_tot)
-        .alias("hi_c"),
+    tagged = nearest_rank_cuts(
+        grid, ["event_type"], "c", {"lo_c": (1, 100), "hi_c": (99, 100)}
     )
     cw = F.greatest(F.least(F.col("c"), F.col("hi_c")), F.col("lo_c"))
     agg = tagged.select(
@@ -908,10 +878,10 @@ ORDER BY src, dst
 # deviation, the winsorize/z-score companion that heavy tails cannot
 # drag: per event type, med = nearest-rank median of the cent grid,
 # MAD = nearest-rank median of |c - med|, outlier iff |c - med| >
-# 5 * MAD. Every quantity is an exact integer (both medians run the
-# cumulative-frequency walk from operators/relational.
-# nearest_rank_percentiles — |distinct values| rows per key, never N),
-# so the flag can never split across engines.
+# 5 * MAD. Every quantity is an exact integer (both medians are
+# operators/relational.nearest_rank_cuts over a frequency grid —
+# |distinct values| rows per key, never N), so the flag can never
+# split across engines.
 # ---------------------------------------------------------------------------
 
 _MAD_K = 5
@@ -927,39 +897,14 @@ def anomaly_mad_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # d-grid; the final rollup sums d-grid frequencies. The previous
     # formulation derived the event-scale dev frame three times through
     # two broadcast-join diamonds (4 scans total).
-    from pyspark.sql import Window as W
+    from etl_ml_pipeline_spark.operators.relational import nearest_rank_cuts
 
     ev = t(spark, sf_dir, "events").select(
         "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("c"),
     )
     grid = ev.groupBy("event_type", "c").agg(F.count("*").alias("__f"))
-    w_cum_c = (
-        W.partitionBy("event_type")
-        .orderBy("c")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    w_tot = W.partitionBy("event_type")
-    ranked = grid.select(
-        "event_type",
-        "c",
-        "__f",
-        F.sum("__f").over(w_cum_c).alias("__cum"),
-        F.sum("__f").over(w_tot).alias("__total"),
-    )
-    with_med = ranked.select(
-        "event_type",
-        "c",
-        "__f",
-        F.min(
-            F.when(
-                F.col("__cum") >= F.expr("(1 * __total + 1) div 2"),
-                F.col("c"),
-            )
-        )
-        .over(w_tot)
-        .alias("med"),
-    )
+    with_med = nearest_rank_cuts(grid, ["event_type"], "c", {"med": (1, 2)})
     dgrid = (
         with_med.select(
             "event_type",
@@ -970,33 +915,7 @@ def anomaly_mad_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "d")
         .agg(F.sum("__f").alias("__f"), F.max("med").alias("med"))
     )
-    w_cum_d = (
-        W.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    ranked_d = dgrid.select(
-        "event_type",
-        "d",
-        "med",
-        "__f",
-        F.sum("__f").over(w_cum_d).alias("__cum"),
-        F.sum("__f").over(w_tot).alias("__total"),
-    )
-    with_mad = ranked_d.select(
-        "event_type",
-        "d",
-        "med",
-        "__f",
-        F.min(
-            F.when(
-                F.col("__cum") >= F.expr("(1 * __total + 1) div 2"),
-                F.col("d"),
-            )
-        )
-        .over(w_tot)
-        .alias("mad"),
-    )
+    with_mad = nearest_rank_cuts(dgrid, ["event_type"], "d", {"mad": (1, 2)})
     return (
         with_mad.groupBy("event_type")
         .agg(

@@ -1761,9 +1761,9 @@ ORDER BY bucket
 # ---------------------------------------------------------------------------
 # hist_equidepth_prices — EQUI-DEPTH histogram of order prices: 9
 # nearest-rank decile boundaries (exact integer cents via
-# operators/relational.nearest_rank_percentiles — the optimizer-
-# statistics shape), then one map-side bucket assignment as a sum of
-# broadcast boundary comparisons and a 10-row count aggregate. Bucket
+# operators/relational.nearest_rank_cuts — the optimizer-statistics
+# shape), then each grid row's bucket as a sum of boundary comparisons
+# and a 10-row count aggregate. Bucket
 # counts are near-n/10 by construction, off only by boundary ties —
 # which both engines resolve identically on the integer grid.
 # ---------------------------------------------------------------------------
@@ -1775,35 +1775,17 @@ def hist_equidepth_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final histogram both come from the c-frequency grid — one orders
     # scan, no order-scale crossJoin + re-aggregate (the previous
     # bounds-aggregate + tagging diamond scanned orders twice). The
-    # cuts use the identical k = (i*n + 9) div 10 nearest-rank
-    # arithmetic, inlined as window aggregates over the single-group
-    # grid (the grid walk was already one task under g=1).
-    from pyspark.sql import Window as W
+    # cuts are window aggregates over the keyless grid (the grid walk
+    # was already one task under g=1).
+    from etl_ml_pipeline_spark.operators.relational import nearest_rank_cuts
 
     o = t(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("c")
     )
     freqs = o.groupBy("c").agg(F.count("*").alias("__f"))
-    w_cum = W.orderBy("c").rowsBetween(W.unboundedPreceding, 0)
-    w_tot = W.partitionBy()
-    ranked = freqs.select(
-        "c",
-        "__f",
-        F.sum("__f").over(w_cum).alias("__cum"),
-        F.sum("__f").over(w_tot).alias("__total"),
+    tagged = nearest_rank_cuts(
+        freqs, [], "c", {f"b{i}": (i, 10) for i in range(1, 10)}
     )
-    cut_cols = [
-        F.min(
-            F.when(
-                F.col("__cum") >= F.expr(f"({i} * __total + 9) div 10"),
-                F.col("c"),
-            )
-        )
-        .over(w_tot)
-        .alias(f"b{i}")
-        for i in range(1, 10)
-    ]
-    tagged = ranked.select("c", "__f", *cut_cols)
     bucket = None
     for i in range(1, 10):
         term = (F.col("c") > F.col(f"b{i}")).cast("int")

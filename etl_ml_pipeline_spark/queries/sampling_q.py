@@ -1370,9 +1370,8 @@ LIMIT 20
 # +1e-6 nudge — JVM log vs libm ln 1-ulp fence posture) and the
 # per-doc mean taken with integer DIV, so every downstream comparison
 # is exact. Tertile cuts are per-language nearest-rank percentiles
-# over the (lang, spp) frequency grid — the same k = ceil(p*n)
-# arithmetic as operators/relational.nearest_rank_percentiles, inlined
-# as window aggregates (see below).
+# over the (lang, spp) frequency grid (operators/relational.
+# nearest_rank_cuts: k = ceil(p*n) as window aggregates).
 #
 # Scale: one token-scale map-side-combined shuffle (bucket counts), a
 # 1024-row broadcast back onto the token stream, one doc-level
@@ -1386,8 +1385,7 @@ LIMIT 20
 
 
 def sample_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
+    from etl_ml_pipeline_spark.operators.relational import nearest_rank_cuts
     from etl_ml_pipeline_spark.operators.text import unigram_surprisal_scores
 
     docs = t(spark, sf_dir, "documents", heavy=True).select(
@@ -1403,60 +1401,24 @@ def sample_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # removes the second evaluation without a pin, because the cuts and
     # the final rollup only need (lang, spp, doc-count, token-sum).
     grid = per_doc.groupBy("lang", "spp").agg(
-        F.count("*").alias("__cnt"),
+        F.count("*").alias("__f"),
         F.sum("n_tokens").cast("long").alias("__toks"),
     )
-    # nearest-rank cuts as WINDOW aggregates over the per-lang grid
-    # (identical k = (p*n + den-1) div den arithmetic as
-    # nearest_rank_percentiles) — windows over the same partitioning
-    # chain on one exchange, no aggregate + join-back. A NULL lang is
-    # its own window partition, matching the null-safe-join audit
-    # semantics of the previous formulation.
-    w_cum = (
-        W.partitionBy("lang")
-        .orderBy("spp")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    w_tot = W.partitionBy("lang")
-    ranked = grid.select(
-        "lang",
-        "spp",
-        "__cnt",
-        "__toks",
-        F.sum("__cnt").over(w_cum).alias("__cum"),
-        F.sum("__cnt").over(w_tot).alias("__total"),
-    )
-    cut = ranked.select(
-        "lang",
-        "spp",
-        "__cnt",
-        "__toks",
-        F.min(
-            F.when(
-                F.col("__cum") >= F.expr("(1 * __total + 2) div 3"),
-                F.col("spp"),
-            )
-        )
-        .over(w_tot)
-        .alias("c1"),
-        F.min(
-            F.when(
-                F.col("__cum") >= F.expr("(2 * __total + 2) div 3"),
-                F.col("spp"),
-            )
-        )
-        .over(w_tot)
-        .alias("c2"),
-    )
+    # nearest-rank cuts as WINDOW aggregates over the per-lang grid —
+    # windows over the same partitioning chain on one exchange, no
+    # aggregate + join-back. A NULL lang is its own window partition,
+    # matching the null-safe-join audit semantics of the previous
+    # formulation.
+    cut = nearest_rank_cuts(grid, ["lang"], "spp", {"c1": (1, 3), "c2": (2, 3)})
     tier = (F.col("spp") > F.col("c1")).cast("int") + (
         F.col("spp") > F.col("c2")
     ).cast("int")
     name = F.element_at(F.array(F.lit("head"), F.lit("middle"), F.lit("tail")), tier + 1)
     return (
-        cut.select("lang", name.alias("ppl_bucket"), "__cnt", "__toks", "spp")
+        cut.select("lang", name.alias("ppl_bucket"), "__f", "__toks", "spp")
         .groupBy("lang", "ppl_bucket")
         .agg(
-            F.sum("__cnt").cast("long").alias("n_docs"),
+            F.sum("__f").cast("long").alias("n_docs"),
             F.sum("__toks").cast("long").alias("n_tokens"),
             F.min("spp").alias("min_spp"),
             F.max("spp").alias("max_spp"),
@@ -1530,7 +1492,8 @@ ORDER BY p.lang, ppl_bucket
 # the first `alloc` in md5-hash order (deterministic, reshuffle-proof).
 #
 # Scale: stratum counts are one map-side-combined shuffle; the quota
-# table is strata-sized (broadcast); selection is a per-stratum window
+# table is strata-sized (operators/relational.largest_remainder,
+# broadcast); selection is a per-stratum window
 # (partitioned by lang, never global) + a broadcast semi-join.
 # ---------------------------------------------------------------------------
 
@@ -1540,36 +1503,11 @@ _ALLOC_N = 100
 def sample_exact_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
+    from etl_ml_pipeline_spark.operators.relational import largest_remainder
+
     docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
     cnt = docs.groupBy("lang").agg(F.count("*").alias("n"))
-    # r15 optimization: total and spare were agg + crossJoin diamonds —
-    # each branch prunes different columns, so the branch subtrees stop
-    # being identical, exchange reuse never fires, and the doc-scale
-    # groupBy (and its scan) re-derives once per branch (measured 5
-    # lineage evaluations). Unpartitioned window sums over the
-    # |langs|-row frame keep ONE lineage: one corpus pass, then
-    # arithmetic on the tiny frame (the frame already collapses to a
-    # single partition for the w_rem rank window below, so the window
-    # totals are free). Integer arithmetic unchanged — same results.
-    w_all = W.partitionBy()
-    quota = cnt.withColumn("nt", F.sum("n").over(w_all)).select(
-        "lang",
-        F.expr(f"{_ALLOC_N} * n DIV nt").alias("base"),
-        F.expr(f"({_ALLOC_N} * n) % nt").alias("rem"),
-    )
-    # strata-sized window (languages, not rows) — bounded cardinality
-    w_rem = W.orderBy(F.desc("rem"), "lang")
-    alloc = (
-        quota.withColumn("spare", F.lit(_ALLOC_N) - F.sum("base").over(w_all))
-        .withColumn("pos", F.row_number().over(w_rem))
-        .select(
-            "lang",
-            (
-                F.col("base")
-                + F.when(F.col("pos") <= F.col("spare"), 1).otherwise(0)
-            ).alias("alloc"),
-        )
-    )
+    alloc = largest_remainder(cnt, "lang", "n", _ALLOC_N, "alloc")
     w_lang = W.partitionBy("lang").orderBy(
         token_hash60(F.col("doc_id").cast("string")), "doc_id"
     )
@@ -1672,7 +1610,8 @@ ORDER BY pos
 # in tokens.
 #
 # Scale: per-source token counts are one map-side-combined shuffle; the
-# weight/budget table is |sources|-sized (broadcast); the per-source
+# weight/budget table is |sources|-sized (operators/relational.
+# largest_remainder, broadcast); the per-source
 # cumulative token offset uses grouped_running_sum — the two-phase
 # prefix sum extended with the group key, so a mega-source spanning
 # many partitions parallelizes instead of serializing in one
@@ -1684,9 +1623,10 @@ _MIX_BUDGET = 20_000
 
 
 def sample_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    from etl_ml_pipeline_spark.operators.relational import grouped_running_sum
+    from etl_ml_pipeline_spark.operators.relational import (
+        grouped_running_sum,
+        largest_remainder,
+    )
     from etl_ml_pipeline_spark.operators.text import token_count
 
     docs = t(spark, sf_dir, "documents").select(
@@ -1699,33 +1639,7 @@ def sample_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     wexpr = 1 + token_hash60(F.col("source")) % 4
     cnt = docs.groupBy("source").agg(F.count("*").alias("n_docs_src"))
     weights = cnt.select("source", wexpr.alias("w"))
-    # r15 optimization: weight total and spare as unpartitioned window
-    # sums over the |sources|-row frame instead of agg + crossJoin
-    # diamonds (each branch re-derived the source scan+groupBy; column
-    # pruning de-identifies the subtrees so exchange reuse never
-    # fires). Same integer arithmetic — identical allocation.
-    w_all = W.partitionBy()
-    quota = weights.withColumn("wt", F.sum("w").over(w_all)).select(
-        "source",
-        "w",
-        F.expr(f"{_MIX_BUDGET} * w DIV wt").alias("base"),
-        F.expr(f"({_MIX_BUDGET} * w) % wt").alias("rem"),
-    )
-    w_rem = W.orderBy(F.desc("rem"), "source")  # |sources|-sized window
-    budget = (
-        quota.withColumn(
-            "spare", F.lit(_MIX_BUDGET) - F.sum("base").over(w_all)
-        )
-        .withColumn("pos", F.row_number().over(w_rem))
-        .select(
-            "source",
-            "w",
-            (
-                F.col("base")
-                + F.when(F.col("pos") <= F.col("spare"), 1).otherwise(0)
-            ).alias("budget_tok"),
-        )
-    )
+    budget = largest_remainder(weights, "source", "w", _MIX_BUDGET, "budget_tok")
     cum = grouped_running_sum(
         docs.withColumn("h", token_hash60(F.col("doc_id").cast("string"))),
         "n_tok",

@@ -26,7 +26,12 @@ JVM, no JDBC) so it runs in a couple of seconds:
    (call ``grouped_running_sum`` instead of re-assembling it);
 10. one ANN rerank core: no package module but
    ``operators/similarity.py`` calls ``mmr_select(`` or defines a cosine
-   clamp in its code (call ``mmr_rerank`` / ``cos_clamped`` instead).
+   clamp in its code (call ``mmr_rerank`` / ``cos_clamped`` instead);
+11. one nearest-rank cut and one largest-remainder quota: no package
+   module but ``operators/relational.py`` holds a nearest-rank cut
+   string (``__total + <int>) div``) or a largest-remainder remainder
+   (``(total * w) % wt``) in its code (call ``nearest_rank_cuts`` /
+   ``nearest_rank_percentiles`` / ``largest_remainder`` instead).
 
 Escape hatch for genuinely unrelated emergency commits:
 ``PRECOMMIT_SKIP=1 python scripts/precommit_check.py``.
@@ -228,10 +233,23 @@ def main() -> None:
                  f"({hit.group()!r}) — call operators.similarity.mmr_rerank / "
                  "cos_clamped instead")
 
+    # 11. one nearest-rank cut and one largest-remainder quota:
+    # relational.py owns the k = ceil(p*n) rank arithmetic and the
+    # Hamilton split. The DuckDB oracles write // for integer division,
+    # so only Spark-side copies match.
+    quantile = re.compile(r"__total \+ \d+\) (?i:div)|\* \w+\) % \w+['\"]")
+    for path in package:
+        hit = path != prefix_home and quantile.search(_code(path.read_text()))
+        if hit:
+            fail(f"{path.relative_to(REPO)} re-implements a nearest-rank cut or a "
+                 f"largest-remainder quota ({hit.group()!r}) — call "
+                 "operators.relational.nearest_rank_cuts / nearest_rank_percentiles "
+                 "/ largest_remainder instead")
+
     print(
         f"precommit_check: OK — catalog {len(qs)} queries, pin + "
         "CATALOG.md + oracles + staleness + README + scripts + session policy + "
-        "prefix primitive + ANN rerank core consistent"
+        "prefix primitive + ANN rerank core + nearest-rank/quota home consistent"
     )
 
 

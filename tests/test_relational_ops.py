@@ -64,32 +64,102 @@ def test_nearest_rank_percentiles_property(spark):
     """Property: for any multiset and percentile p, the operator returns
     sorted(vals)[ceil(p*n)-1] — checked against the direct definition
     over a grid of adversarial value sets (heavy duplication, negatives,
-    single element)."""
+    single element, a NULL key). The window form nearest_rank_cuts must
+    put that same value on every grid row of the key, also with no
+    keys at all."""
     import math
 
-    from etl_ml_pipeline_spark.operators.relational import nearest_rank_percentiles
+    from pyspark.sql import functions as F
 
-    cases = [
-        [5],
-        [-3, -3, -3],
-        [1, 2, 2, 2, 2, 2, 3],
-        list(range(20)) + [7] * 30,
-        [-10, 0, 0, 10, 10, 10, 10],
-    ]
+    from etl_ml_pipeline_spark.operators.relational import (
+        nearest_rank_cuts,
+        nearest_rank_percentiles,
+    )
+
+    cases = {
+        "g0": [5],
+        "g1": [-3, -3, -3],
+        "g2": [1, 2, 2, 2, 2, 2, 3],
+        "g3": list(range(20)) + [7] * 30,
+        "g4": [-10, 0, 0, 10, 10, 10, 10],
+        None: [4, 4, 1, 9],
+    }
     pcts = {"p01": (1, 100), "p25": (1, 4), "p50": (1, 2), "p75": (3, 4), "p99": (99, 100)}
-    rows = [(f"g{i}", v) for i, vals in enumerate(cases) for v in vals]
+
+    def nr(vals, num, den):
+        ordered = sorted(vals)
+        return ordered[max(0, math.ceil(num * len(ordered) / den) - 1)]
+
+    rows = [(k, v) for k, vals in cases.items() for v in vals]
+    df = spark.createDataFrame(rows, "k string, v long")
     got = {
         r["k"]: r
-        for r in nearest_rank_percentiles(
-            spark.createDataFrame(rows, ["k", "v"]), ["k"], "v", pcts
-        ).collect()
+        for r in nearest_rank_percentiles(df, ["k"], "v", pcts).collect()
     }
-    for i, vals in enumerate(cases):
-        ordered = sorted(vals)
-        n = len(ordered)
+    assert set(got) == set(cases)
+    for k, vals in cases.items():
         for name, (num, den) in pcts.items():
-            expect = ordered[max(0, math.ceil(num * n / den) - 1)]
-            assert got[f"g{i}"][name] == expect, (i, name)
+            assert got[k][name] == nr(vals, num, den), (k, name)
+
+    grid = df.groupBy("k", "v").agg(F.count("*").alias("__f"))
+    cut = nearest_rank_cuts(grid, ["k"], "v", pcts).collect()
+    assert len(cut) == grid.count()
+    for r in cut:
+        assert r["__f"] == cases[r["k"]].count(r["v"]), r
+        for name in pcts:
+            assert r[name] == got[r["k"]][name], (r["k"], name)
+
+    everything = [v for _, v in rows]
+    flat = nearest_rank_cuts(
+        df.groupBy("v").agg(F.count("*").alias("__f")), [], "v", pcts
+    ).collect()
+    assert len(flat) == len(set(everything))
+    for r in flat:
+        for name, (num, den) in pcts.items():
+            assert r[name] == nr(everything, num, den), name
+
+
+def test_largest_remainder_property(spark):
+    """Property: the Hamilton split sums to ``total`` exactly, gives
+    each key its exact quota rounded down or up, and hands tied
+    remainders to the lower key."""
+    from fractions import Fraction
+
+    from etl_ml_pipeline_spark.operators.relational import largest_remainder
+
+    cases = [
+        ([("a", 1), ("b", 1), ("c", 1)], 100),  # three-way remainder tie
+        ([("x", 3), ("y", 1)], 10),
+        ([("p", 7), ("q", 5), ("r", 2), ("s", 9), ("t", 1)], 97),
+        ([("only", 4)], 13),
+        ([("b", 2), ("a", 2), ("d", 1), ("c", 1)], 7),
+    ]
+    for weights, total in cases:
+        df = spark.createDataFrame(weights, "key string, w long")
+        got = {
+            r["key"]: r["alloc"]
+            for r in largest_remainder(df, "key", "w", total, "alloc").collect()
+        }
+        wsum = sum(w for _, w in weights)
+        exact = {k: Fraction(total * w, wsum) for k, w in weights}
+        assert sum(got.values()) == total, weights
+        for k, q in exact.items():
+            assert q - 1 < got[k] < q + 1, (k, got[k], q)
+        # a key that got the extra unit never has a smaller remainder
+        # than one that did not, and on equal remainders the lower key
+        # gets it
+        up = {k for k, q in exact.items() if got[k] > q}
+        for k in up:
+            for o in set(exact) - up:
+                rk, ro = exact[k] % 1, exact[o] % 1
+                assert rk > ro or (rk == ro and k < o), (k, o)
+    # the three-way tie: 100 / 3 leaves one unit, which goes to "a"
+    df = spark.createDataFrame(cases[0][0], "key string, w long")
+    got = sorted(
+        (r["key"], r["alloc"])
+        for r in largest_remainder(df, "key", "w", 100, "alloc").collect()
+    )
+    assert got == [("a", 34), ("b", 33), ("c", 33)]
 
 
 def test_skyline_2d_matches_bruteforce_dominance(spark):

@@ -355,6 +355,32 @@ def test_similarity_topk_mmr_mode_diversifies(spark):
     assert [int(c) for c in exact.c_id] == [10, 11]
 
 
+def test_similarity_topk_mmr_pool_ranks_clamped_cosine(spark):
+    """The `mmr` pool is cut on the [-1, 1]-clamped cosine, as in
+    ann_mmr_rerank_topk: two candidates whose raw sequential-fold
+    cosines are 1.0000000000000002 (c_id 2, a copy of the query) and
+    1.0 (c_id 1, a scaled copy) tie once clamped, so a pool of one
+    keeps the lower c_id."""
+    from etl_ml_pipeline_spark.registry import TRANSFORMS
+
+    corpus = spark.createDataFrame(
+        [(1, [3.0, 3.0, 3.0]), (2, [1.0, 1.0, 1.0])],
+        "c_id long, c_vec array<double>",
+    )
+    spark.createDataFrame(
+        [(0, [1.0, 1.0, 1.0])], "q_id long, q_vec array<double>"
+    ).createOrReplaceTempView("mmr_clamp_queries")
+    raw = TRANSFORMS.get("similarity_topk")(
+        {"queries_view": "mmr_clamp_queries", "mode": "exact", "k": 2}
+    )(corpus).toPandas()
+    assert dict(zip(raw.c_id, raw.cos)) == {1: 1.0, 2: 1.0000000000000002}
+    out = TRANSFORMS.get("similarity_topk")(
+        {"queries_view": "mmr_clamp_queries", "mode": "mmr", "k": 1, "pool": 1}
+    )(corpus).toPandas()
+    assert [int(c) for c in out.c_id] == [1]
+    assert [float(m) for m in out.mmr] == [0.7]
+
+
 def test_mmr_matches_numpy_greedy_replay(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").toPandas()
     vecs = {
